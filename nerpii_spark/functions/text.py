@@ -58,7 +58,9 @@ def frequency_df(df: DataFrame, column: str) -> DataFrame:
 
 def address_pattern(additional: list[str] | None = None) -> str:
     """Regex (valid for both Java regex and RE2) matching any term of the
-    reference's deny list as a whole word; 'C/' matched literally."""
+    reference's deny list as a whole word; 'C/' matched literally. This is
+    the SQL side's form; the Python detectors build the same match set
+    with `operators.detect._word_alt`."""
     words = [w for w in G.ADDRESS_DENY_LIST if w != "C/"] + list(additional or [])
     alt = "|".join(re.escape(w) for w in sorted(words, key=len, reverse=True))
     return rf"\b(?:{alt})\b|C/"

@@ -35,8 +35,9 @@ from ..functions import gazetteers as G
 from ..sources.pages import luhn_valid
 
 # split at sentence-final punctuation, but never after a middle initial
-# ("James Q. Smith" — the fixed-width lookbehind rejects "<space><cap>.")
-SENT_SPLIT = re.compile(r"(?<=[.!?])(?<!\s[A-Z]\.)\s+")
+# ("James Q. Smith" — the fixed-width lookbehind rejects "<space><cap>.");
+# the lookbehinds sit behind the first whitespace so `re` can scan for it
+SENT_SPLIT = re.compile(r"\s(?<=[.!?]\s)(?<!\s[A-Z]\.\s)\s*")
 
 
 def _alt(words: list[str]) -> str:
@@ -71,29 +72,70 @@ def _trie_alt(words: list[str]) -> str:
     return "(?:" + emit(root) + ")"
 
 
+def _word_alt(words: list[str], extra: dict[str, str] | None = None) -> str:
+    r"""`\b(?:_alt(words))\b` as one branch per first character, each
+    starting with that literal so `re` can skip straight to candidate
+    positions (a leading `\b` or lookbehind turns off its first-character
+    scan). The leading `\b` moves behind the head it guards: after a word
+    character `X`, `(?<!\w[\s\S])` (nothing wordy before it); after a
+    non-word head, `(?<=\w[\s\S])`. The rest of the head's words is a
+    `_trie_alt`, so every span is the same as the plain alternation's.
+    `extra` maps a head character to a raw tail tried after that head's
+    words with no boundary assertions: `{"C": "/"}` appends `|C/`."""
+    if "" in words:
+        raise ValueError("gazetteer terms must be non-empty")
+    extra = extra or {}
+    groups: dict[str, list[str]] = {}
+    for w in words:
+        groups.setdefault(w[0], []).append(w[1:])
+    branches = []
+    for head in sorted(groups.keys() | extra.keys()):
+        tails = []
+        if head in groups:
+            look = "(?<!" if re.match(r"\w", head) else "(?<="
+            tails.append(rf"{look}\w[\s\S]){_trie_alt(groups[head])}\b")
+        if head in extra:
+            tails.append(extra[head])
+        body = tails[0] if len(tails) == 1 else "(?:" + "|".join(tails) + ")"
+        branches.append(re.escape(head) + body)
+    return "(?:" + "|".join(branches) + ")"
+
+
+# Every built-in pattern starts with a literal or a character class, with
+# each boundary assertion moved behind the first character it guards:
+# `\d(?<![\d-]\d)` is `(?<![\d-])\d`, but lets `re` scan for a digit
+# first instead of attempting a match at every position.
+
 # --- structural recognizers (Presidio-style) -------------------------------
 RE_EMAIL = re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
 RE_URL = re.compile(r"https?://[^\s<>\"']+")
-RE_PHONE = re.compile(r"\(\d{3}\) \d{3}-\d{4}|(?<![\d-])\d{3}-\d{3}-\d{4}(?![\d-])")
-RE_SSN = re.compile(r"(?<![\d-])\d{3}-\d{2}-\d{4}(?![\d-])")
-RE_CARD = re.compile(r"(?<![\d-])\d{13,16}(?![\d-])")
-RE_ZIP = re.compile(r"(?<![\d/.-])\d{5}(?![\d-])")
+RE_PHONE = re.compile(
+    r"[(\d](?:(?<=\()\d{3}\) \d{3}-\d{4}"
+    r"|(?<=\d)(?<![\d-]\d)\d{2}-\d{3}-\d{4}(?![\d-]))"
+)
+RE_SSN = re.compile(r"\d(?<![\d-]\d)\d{2}-\d{2}-\d{4}(?![\d-])")
+RE_CARD = re.compile(r"\d(?<![\d-]\d)\d{12,15}(?![\d-])")
+RE_ZIP = re.compile(r"\d(?<![\d/.-]\d)\d{4}(?![\d-])")
 
 # --- gazetteer recognizers (spaCy stand-ins) --------------------------------
 _FIRSTS = G.FIRST_NAMES + [n.upper() for n in G.FIRST_NAMES]
 # optional middle initial between first and last name ("James Q. Smith")
-RE_PERSON = re.compile(rf"\b{_trie_alt(_FIRSTS)} (?:[A-Z]\. )?[A-Z][a-z]+\b")
-_LOCS = G.CITIES + G.STATES + G.COUNTRIES
-RE_LOC = re.compile(rf"\b{_trie_alt(_LOCS)}\b|\b{_trie_alt(G.STATE_ABBR)}\b")
+_PERSON_TAIL = r" (?:[A-Z]\. )?[A-Z][a-z]+\b"
+RE_PERSON = re.compile(_word_alt(_FIRSTS) + _PERSON_TAIL)
+# one trie for names and state abbreviations: every name is longer than
+# the 2-letter abbreviations, so at a shared start the name still wins
+RE_LOC = re.compile(_word_alt(G.CITIES + G.STATES + G.COUNTRIES + G.STATE_ABBR))
 
 # --- pattern ORGANIZATION (BERT stand-in) -----------------------------------
 RE_ORG = re.compile(
-    rf"\b[A-Z][a-z]+ {_trie_alt(G.ORG_SUFFIXES)}\b|\bUniversity of [A-Z][a-z]+\b"
+    rf"[A-Z](?<!\w[\s\S])(?:[a-z]+ {_trie_alt(G.ORG_SUFFIXES)}\b"
+    r"|(?<=U)niversity of [A-Z][a-z]+\b)"
 )
 
 # --- the reference's deny-list ADDRESS recognizer ---------------------------
 _DENY_WORDS = [w for w in G.ADDRESS_DENY_LIST if w != "C/"]
-RE_ADDRESS = re.compile(rf"\b{_trie_alt(_DENY_WORDS)}\b|C/")
+_DENY_EXTRA = {"C": "/"}  # 'C/' matches bare, without word boundaries
+RE_ADDRESS = re.compile(_word_alt(_DENY_WORDS, _DENY_EXTRA))
 
 # --- detector registry ------------------------------------------------------
 # A detector is DATA: (entity_type, matcher, score, detector_name,
@@ -150,8 +192,6 @@ def build_detectors(
     returning fn(segment) -> [(start, end)], constructed once per
     executor; see the registry comment), so a real Presidio/spaCy/HF
     engine rides the same seam as the stand-ins."""
-    from ..functions.text import address_pattern
-
     dets: list[DetectorSpec] = [
         ("EMAIL_ADDRESS", RE_EMAIL, 1.0, "regex_email", False, "at"),
         ("URL", RE_URL, 0.5, "regex_url", False, "http"),
@@ -164,7 +204,7 @@ def build_detectors(
         rx = (
             RE_ADDRESS
             if not additional_addresses
-            else address_pattern(list(additional_addresses))
+            else _word_alt(_DENY_WORDS + list(additional_addresses), _DENY_EXTRA)
         )
         # every built-in deny term is capitalized ('C/' incl.), so 'up'
         # is a necessary condition unless a user-added term is lowercase
@@ -176,8 +216,8 @@ def build_detectors(
         dets.append(("ADDRESS", rx, 1.0, "denylist_address", False, guard))
     if lang == "it":
         firsts = G.IT_FIRST_NAMES + [n.upper() for n in G.IT_FIRST_NAMES]
-        rx_person = rf"\b{_trie_alt(firsts)} (?:[A-Z]\. )?[A-Z][a-z]+\b"
-        rx_loc = rf"\b{_trie_alt(G.IT_CITIES + G.COUNTRIES)}\b"
+        rx_person = _word_alt(firsts) + _PERSON_TAIL
+        rx_loc = _word_alt(G.IT_CITIES + G.COUNTRIES)
         dets.append(
             ("PERSON", rx_person, 0.85, "gazetteer_person_it", False, "up")
         )
@@ -253,6 +293,20 @@ MENTION_FIELDS = (
 )
 
 
+def _segments(text: str) -> list[tuple[int, str]]:
+    """(start offset, text) of each SENT_SPLIT segment, from one finditer
+    pass. An empty last segment (the text ends in a separator) starts
+    where that separator does."""
+    out = []
+    b = sep = 0
+    for m in SENT_SPLIT.finditer(text):
+        sep = m.start()
+        out.append((b, text[b:sep]))
+        b = m.end()
+    out.append((b if b < len(text) else sep, text[b:]))
+    return out
+
+
 def scan_text(text: str, detectors: list[DetectorSpec] | None = None) -> list[tuple]:
     """All mentions in one document text. Returns tuples matching
     MENTION_FIELDS order. `detectors` must be pre-compiled (regex
@@ -260,32 +314,37 @@ def scan_text(text: str, detectors: list[DetectorSpec] | None = None) -> list[tu
 
     Per-segment guards (substring/charclass necessary conditions) skip
     regexes that cannot match — measured 1.25x on the fused e2e scan,
-    byte-identical output (guards are implied by the patterns)."""
+    byte-identical output (guards are implied by the patterns). Each is
+    checked inline when its detector comes up; the digit probe runs at
+    most once per segment, and only if a 'dig' detector is reached."""
+    dets = PAGE_DETECTORS if detectors is None else detectors
     out = []
-    pos = 0
-    for sid, seg in enumerate(SENT_SPLIT.split(text)):
-        start = text.index(seg, pos)
-        pos = start + len(seg)
-        guard_ok = {
-            "at": "@" in seg,
-            "http": "http" in seg,
-            # C-level regex search: the python-level any(isdigit) generator
-            # was 87% of scan time on mention-sparse segments
-            "dig": _HAS_DIGIT.search(seg) is not None,
-            # islower() is False when ANY uppercase cased char exists or
-            # when there are no cased chars at all — conservative either way
-            "up": not seg.islower(),
-            None: True,
-        }
+    for sid, (start, seg) in enumerate(_segments(text)):
+        # islower() is False when ANY uppercase cased char exists or
+        # when there are no cased chars at all — conservative either way
+        no_up = seg.islower()
+        dig = None
         m_works = " works at " in seg
         m_lives = " lives at " in seg
         m_in = " in " in seg
-        for etype, rx, score, det, needs_luhn, guard in (
-            PAGE_DETECTORS if detectors is None else detectors
-        ):
-            if not guard_ok[guard]:
-                continue
-            if isinstance(rx, re.Pattern):  # hot path — untouched
+        for etype, rx, score, det, needs_luhn, guard in dets:
+            if guard == "up":
+                if no_up:
+                    continue
+            elif guard == "dig":
+                if dig is None:
+                    # C-level regex search: a python-level any(isdigit)
+                    # was 87% of scan time on mention-sparse segments
+                    dig = _HAS_DIGIT.search(seg) is not None
+                if not dig:
+                    continue
+            elif guard == "at":
+                if "@" not in seg:
+                    continue
+            elif guard == "http":
+                if "http" not in seg:
+                    continue
+            if isinstance(rx, re.Pattern):  # hot path
                 for m in rx.finditer(seg):
                     if needs_luhn and not luhn_valid(m.group(0)):
                         continue

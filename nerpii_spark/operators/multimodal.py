@@ -232,12 +232,12 @@ def decode_media(payload: bytes, kind: str):
 def _decode_bmp(payload: bytes):
     """Parse an uncompressed 24-bit BMP; None if the payload is not one.
     Validation mirrors the DuckDB oracle bit-for-bit: magic, file size,
-    BITMAPINFOHEADER size 40, bpp 24, compression 0, and the padded pixel
-    region exactly filling the file."""
+    BITMAPINFOHEADER size 40, bpp 24, compression 0, unsigned positive
+    dims, and the padded pixel region exactly filling the file."""
     if len(payload) < 54 or payload[:2] != b"BM":
         return None
     (file_size,) = struct.unpack_from("<I", payload, 2)
-    (hdr_size, width, height) = struct.unpack_from("<Iii", payload, 14)
+    (hdr_size, width, height) = struct.unpack_from("<III", payload, 14)
     (bpp,) = struct.unpack_from("<H", payload, 28)
     (compression,) = struct.unpack_from("<I", payload, 30)
     if (
@@ -245,6 +245,9 @@ def _decode_bmp(payload: bytes):
         or compression != 0 or width <= 0 or height <= 0
     ):
         return None
+    # dims bounded by the payload length like the oracle's least(.., nb):
+    # an oversized header then fails the fill check on both sides
+    width, height = min(width, len(payload)), min(height, len(payload))
     stride = ((3 * width + 3) // 4) * 4
     if 54 + stride * height != len(payload):
         return None

@@ -162,6 +162,32 @@ def test_detector_registry_seam(spark):
     assert all(e != "BADGE_ID" for e, _ in brows)
 
 
+def test_additional_address_terms_match_the_sql_pattern():
+    """User deny terms with non-word edges keep `\\b`-bounded semantics:
+    '#Apt' needs a word character before it, 'c/o' must not follow one,
+    and the bare 'C/' still matches — the same spans as the Java/RE2
+    `address_pattern` the SQL side uses. An empty term is refused."""
+    import re
+
+    from nerpii_spark.functions.text import address_pattern
+    from nerpii_spark.operators.detect import build_detectors, compile_detectors
+
+    terms = ["c/o", "#Apt"]
+    rx = {
+        d[3]: d[1]
+        for d in compile_detectors(build_detectors(additional_addresses=terms))
+    }["denylist_address"]
+    text = "Mail c/o Ann, unit#Apt 4, x #Apt 5; disc/o Oak Street, C/ Mayor 3."
+    got = [(m.group(), m.start()) for m in rx.finditer(text)]
+    assert got == [("c/o", 5), ("#Apt", 18), ("Street", 47), ("C/", 55)]
+    assert got == [
+        (m.group(), m.start())
+        for m in re.finditer(address_pattern(terms), text)
+    ]
+    with pytest.raises(ValueError, match="non-empty"):
+        build_detectors(additional_addresses=[""])
+
+
 def test_detector_registry_validation(spark):
     """A typo'd guard tag fails fast driver-side with a clear message;
     an explicitly empty detector list means 'detect nothing', not 'fall

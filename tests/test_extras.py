@@ -238,6 +238,24 @@ def test_media_decode_real_bmp_wav():
         MM.decode_media(wav[:-2], "audio")
 
 
+def test_media_decode_bmp_dims_unsigned_and_bounded():
+    """Header width/height are unsigned uint32 (as the DuckDB oracle reads
+    them) and bounded by the payload length before the fill check, so a
+    width at or above 2**31 is rejected by the same check on both sides
+    rather than read as a negative number."""
+    import struct
+
+    bmp = _golden_bmp(21)
+    assert MM._decode_bmp(bmp) is not None
+    for width in (2**31, 2**31 + 1, 2**32 - 1):
+        bad = bmp[:18] + struct.pack("<I", width) + bmp[22:]
+        assert MM._decode_bmp(bad) is None
+        with pytest.raises(NotImplementedError):
+            MM.decode_media(bad, "image")
+    tall = bmp[:22] + struct.pack("<I", 2**31) + bmp[26:]
+    assert MM._decode_bmp(tall) is None
+
+
 def test_media_feature_plumbing(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     docs.createOrReplaceTempView("m_documents")

@@ -104,6 +104,130 @@ def test_trie_alt_matches_length_sorted_alternation(words, text):
     assert a == b
 
 
+def _detect_text_strategy():
+    """Detector texts: gazetteer terms, digit groups and separators next
+    to word/non-word and non-ASCII characters (Unicode digits, letters)."""
+    from nerpii_spark.functions import gazetteers as G
+
+    tokens = (
+        G.FIRST_NAMES[:8] + ["JAMES", "MARIA"] + G.CITIES[:6]
+        + ["New York", "New York State", "NY", "Ca"]
+        + G.ORG_SUFFIXES + G.ADDRESS_DENY_LIST + G.IT_FIRST_NAMES[:4]
+        + G.IT_CITIES[:4] + [n + " Rossi" for n in G.IT_FIRST_NAMES[:4]]
+        + ["James Smith", "MARIA Q. Bush", "Acme Corp", "Wayne Labs",
+           "University of Rome", "Smith", "Q. ", "University of ", ". ",
+           "! ", "? ", "(555) 123-4567", "555-123-4567", "123-45-6789",
+           "4111111111111111", "12345"]
+    )
+    # edge cases for the assertions placed behind a class head
+    edges = ["(12-345-6789", "Oniversity of Rome", "-12345", "/12345",
+             ".12345", "٣٣٣٣٣", "CA", "C/", "c/o", "#Apt", "X. Y"]
+    piece = st.one_of(
+        st.sampled_from(tokens),
+        st.sampled_from(tokens),
+        st.sampled_from(edges),
+        st.text(alphabet="aZé_ß5٣５ .-/(#@\n", max_size=3),
+        st.text(alphabet="0123456789", min_size=1, max_size=17),
+    )
+    sep = st.sampled_from(
+        [" ", " ", ". ", ", ", "-", "/", "", "\n", "é", "_", "a", "5", "("])
+    return st.lists(
+        st.tuples(piece, sep).map("".join), min_size=4, max_size=30
+    ).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(st.text(alphabet="aAbé_٣-/.# ", min_size=1, max_size=5),
+             min_size=1, max_size=12),
+    st.text(alphabet="aAbé_٣-/.# xC", max_size=80),
+)
+def test_word_alt_matches_bounded_alternation(words, text):
+    r"""`_word_alt` is `\b(?:alt)\b` with every branch led by its literal
+    first character: the same spans for any non-empty word set — word
+    and non-word heads and tails, non-ASCII — and `extra` tails equal a
+    trailing bare alternative."""
+    import re
+
+    from nerpii_spark.operators.detect import _alt, _word_alt
+
+    def spans(rx):
+        return [m.span() for m in re.finditer(rx, text)]
+
+    assert spans(_word_alt(words)) == spans(rf"\b(?:{_alt(words)})\b")
+    assert spans(_word_alt(words, {"C": "/"})) == spans(
+        rf"\b(?:{_alt(words)})\b|C/")
+
+
+def _legacy_detector_patterns() -> dict[str, str]:
+    r"""The pre-rewrite form of every built-in pattern, each led by `\b`
+    or a lookbehind."""
+    from nerpii_spark.functions import gazetteers as G
+    from nerpii_spark.operators.detect import _alt
+
+    def words(ws):
+        return rf"\b(?:{_alt(ws)})\b"
+
+    firsts = G.FIRST_NAMES + [n.upper() for n in G.FIRST_NAMES]
+    it_firsts = G.IT_FIRST_NAMES + [n.upper() for n in G.IT_FIRST_NAMES]
+    deny = [w for w in G.ADDRESS_DENY_LIST if w != "C/"]
+    return {
+        "SENT_SPLIT": r"(?<=[.!?])(?<!\s[A-Z]\.)\s+",
+        "RE_PHONE": r"\(\d{3}\) \d{3}-\d{4}"
+                    r"|(?<![\d-])\d{3}-\d{3}-\d{4}(?![\d-])",
+        "RE_SSN": r"(?<![\d-])\d{3}-\d{2}-\d{4}(?![\d-])",
+        "RE_CARD": r"(?<![\d-])\d{13,16}(?![\d-])",
+        "RE_ZIP": r"(?<![\d/.-])\d{5}(?![\d-])",
+        "RE_PERSON": rf"\b(?:{_alt(firsts)}) (?:[A-Z]\. )?[A-Z][a-z]+\b",
+        "RE_LOC": words(G.CITIES + G.STATES + G.COUNTRIES)
+                  + "|" + words(G.STATE_ABBR),
+        "RE_ORG": rf"\b[A-Z][a-z]+ (?:{_alt(G.ORG_SUFFIXES)})\b"
+                  r"|\bUniversity of [A-Z][a-z]+\b",
+        "RE_ADDRESS": words(deny) + "|C/",
+        "gazetteer_person_it":
+            rf"\b(?:{_alt(it_firsts)}) (?:[A-Z]\. )?[A-Z][a-z]+\b",
+        "gazetteer_location_it": words(G.IT_CITIES + G.COUNTRIES),
+        "denylist_address": words(deny + ["c/o", "#Apt", "Apt."]) + "|C/",
+    }
+
+
+@settings(max_examples=400, deadline=None)
+@given(_detect_text_strategy())
+def test_builtin_detectors_match_legacy_patterns(text):
+    import re
+
+    from nerpii_spark.operators import detect as D
+
+    it = {d[3]: d[1] for d in D.compile_detectors(D.build_detectors(
+        lang="it", additional_addresses=["c/o", "#Apt", "Apt."]))}
+    for name, legacy in _legacy_detector_patterns().items():
+        rx = it[name] if name in it else getattr(D, name)
+        got = [m.span() for m in rx.finditer(text)]
+        assert got == [m.span() for m in re.finditer(legacy, text)], name
+
+
+def _legacy_segments(text: str) -> list[tuple[int, str]]:
+    import re
+
+    out, pos = [], 0
+    for seg in re.split(r"(?<=[.!?])(?<!\s[A-Z]\.)\s+", text):
+        start = text.index(seg, pos)
+        pos = start + len(seg)
+        out.append((start, seg))
+    return out
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.text(alphabet="aB. !?\n\tQ\xa0é", max_size=60))
+def test_segments_match_legacy_split_and_index(text):
+    """One finditer pass gives the (start, segment) pairs of split +
+    str.index, an empty trailing segment included (it starts where its
+    separator does)."""
+    from nerpii_spark.operators.detect import _segments
+
+    assert _segments(text) == _legacy_segments(text)
+
+
 def test_survey_and_driver_contract_in_sync():
     """SURVEY.md §2 is the judge's coverage checklist: every registered
     driver query must appear there and vice versa, and EVERY query needs
@@ -157,6 +281,36 @@ def test_certification_rotation_head_is_uncertified():
         f"as of {snap['rounds']} — regenerate the fixture "
         f"(tools/certified_union.py) and re-sort queries(): {stale}"
     )
+
+
+def test_certified_union_reads_rounds_in_numeric_order(tmp_path, monkeypatch):
+    """Later rounds overwrite earlier rows by ROUND NUMBER: r100 is read
+    after r10, which a lexicographic sort would invert."""
+    import importlib.util
+    import json
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "certified_union",
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools",
+                     "certified_union.py"),
+    )
+    cu = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cu)
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    rows = {
+        9: {"q_a": green, "q_b": green},
+        10: {"q_a": {**green, "err": "boom"}, "q_b": green},
+        100: {"q_a": green, "q_b": {**green, "rows_match": False}},
+    }
+    for n, r in rows.items():
+        (tmp_path / f"CORRECTNESS_r{n}.json").write_text(json.dumps(r))
+    monkeypatch.setattr(cu, "REPO", str(tmp_path))
+    union, rounds = cu.certified_union()
+    assert rounds == [
+        "CORRECTNESS_r9.json", "CORRECTNESS_r10.json", "CORRECTNESS_r100.json"
+    ]
+    assert union == ["q_a"]
 
 
 def _py_spread16(x: int) -> int:

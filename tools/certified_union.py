@@ -13,16 +13,27 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURE = os.path.join(REPO, "tests", "fixtures", "CERTIFIED_UNION.json")
 
 
+def round_number(path: str) -> int:
+    """The integer round of a ``CORRECTNESS_r<N>.json`` path."""
+    m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+    if m is None:
+        raise ValueError(f"not a CORRECTNESS_r<N>.json round artifact: {path}")
+    return int(m.group(1))
+
+
 def certified_union() -> tuple[list[str], list[str]]:
-    """(sorted certified names, sorted rounds consumed)."""
-    files = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
+    """(sorted certified names, rounds consumed in round order)."""
+    files = sorted(
+        glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")), key=round_number
+    )
     latest: dict[str, dict] = {}
-    for path in files:  # sorted => later rounds overwrite earlier rows
+    for path in files:  # round order => later rounds overwrite earlier rows
         with open(path) as f:
             for name, row in json.load(f).items():
                 latest[name] = row
