@@ -98,14 +98,6 @@ aggregate(
 """
 
 
-#: Driver round-trips (collect + checkpoint jobs) spent by the most
-#: recent bpe_merges call — the scale metric batched training improves.
-#: Convenience alias ONLY (last-writer-wins under concurrent trainings
-#: in one process): pass ``stats={}`` to bpe_merges for a race-free
-#: per-call count (ADVICE r4).
-LAST_TRAIN_ROUND_TRIPS = 0
-
-
 def _select_batch(top, at_cap: bool, made: set, budget: int):
     """From one collected top-K ranking, pick the longest prefix of
     merges that sequential greedy BPE would PROVABLY pick in this exact
@@ -190,7 +182,7 @@ def bpe_merges(
     between 60k Spark jobs and a few hundred. Worst case (every
     adjacent top pair shares a symbol, common for English char BPE)
     degrades to exactly the old per-merge cost, never worse.
-    `LAST_TRAIN_ROUND_TRIPS` records collect+checkpoint jobs spent.
+    `stats["round_trips"]` records collect+checkpoint jobs spent.
 
     `sample_mod=k` trains on the deterministic 1/k hash sample of the
     word VOCABULARY (strhash(word) % k == 0 — the
@@ -200,7 +192,6 @@ def bpe_merges(
     dominant pairs a tokenizer cares about). Deterministic, so two runs
     (and any replay oracle built with the same predicate) agree
     exactly; the contract query trains unsampled."""
-    global LAST_TRAIN_ROUND_TRIPS
     from ..functions.hashing import sql_strhash
 
     spark = docs.sparkSession
@@ -242,10 +233,6 @@ def bpe_merges(
         trips += 1
     if stats is not None:
         stats["round_trips"] = trips
-    # module-level alias kept for interactive convenience only: it is
-    # last-writer-wins under concurrent trainings in one process
-    # (ADVICE r4) — callers that need the count pass `stats`
-    LAST_TRAIN_ROUND_TRIPS = trips
     return spark.createDataFrame(
         out, "it bigint, sym_a string, sym_b string, n_weighted bigint"
     )

@@ -338,13 +338,16 @@ def mask_table(
 PERSON_SUBJ_PREDS = ["works_at", "lives_in", "has_email", "has_phone"]
 
 
-def masked_triples_exprs(dialect: str) -> tuple[str, str]:
+def masked_triples_exprs(
+    dialect: str,
+    skey: str = sql_strhash("subj"),
+    okey: str = sql_strhash("obj"),
+) -> tuple[str, str]:
     """(subj_expr, obj_expr) masking PII surfaces in a triples relation:
     person subjects -> synthetic 'First Last' keyed by strhash(subj);
     email/phone objects -> keyed synthetics. Same surface => same key =>
-    same synthetic (stable join keys)."""
-    skey = sql_strhash("subj")
-    okey = sql_strhash("obj")
+    same synthetic (stable join keys). `skey`/`okey` may name columns
+    that already hold those hashes."""
     first = synth_sql(dialect, "first_name", skey, 1)
     last = synth_sql(dialect, "last_name", skey, 1)
     email = synth_sql(dialect, "email", okey, 2)
@@ -365,11 +368,17 @@ def mask_triples(triples: DataFrame) -> DataFrame:
     """triples -> triples_masked (same schema, same COLUMN ORDER — so
     positional ops like union against the unmasked table stay aligned;
     PII surfaces replaced in place)."""
-    subj, obj = masked_triples_exprs("spark")
-    repl = {"subj": F.expr(subj).alias("subj"), "obj": F.expr(obj).alias("obj")}
-    return triples.select(
-        *[repl.get(c, F.col(c)) for c in triples.columns]
+    # each key is its own column: inlined into every synthesizer call, the
+    # strhash polynomial grows the projection's generated method past the
+    # JVM's 64 KB limit, and Spark falls back to interpreted evaluation
+    keyed = triples.select(
+        "*",
+        F.expr(sql_strhash("subj")).alias("_mask_skey"),
+        F.expr(sql_strhash("obj")).alias("_mask_okey"),
     )
+    subj, obj = masked_triples_exprs("spark", "_mask_skey", "_mask_okey")
+    repl = {"subj": F.expr(subj).alias("subj"), "obj": F.expr(obj).alias("obj")}
+    return keyed.select(*[repl.get(c, F.col(c)) for c in triples.columns])
 
 
 # ---------------------------------------------------------------------------

@@ -1,10 +1,11 @@
 """Checkpointed pipeline runner: S1 clean -> S2 detect -> S3 extract ->
 S4 link -> S5 mask, each stage a pure DataFrame -> DataFrame function
-materialized to a partitioned Parquet checkpoint with per-partition
-lineage rows — the north_rule resumability contract.
+materialized to a Parquet checkpoint with per-partition lineage rows —
+the north_rule resumability contract. `STAGES` is the dataflow: every
+operator reads its upstream stage's checkpoint.
 
 Layout (Iceberg-shaped; a real Iceberg catalog is a config swap since
-every write goes through _write_checkpoint):
+every write goes through the TableCatalog):
 
     <root>/clean_pages/     partitioned by (lang, bucket)
     <root>/mentions/        partitioned by (lang, bucket)
@@ -13,7 +14,8 @@ every write goes through _write_checkpoint):
     <root>/triples_masked/  partitioned by (lang, bucket)
     <root>/lineage/         append-only: one row per (run, stage, bucket)
 
-bucket = pmod(xxhash64(url), n_buckets) — the north_rule partitioning key.
+bucket = pmod(xxhash64(url), n_buckets) — the north_rule partitioning key;
+a table is partitioned exactly when it has a url column.
 A stage whose checkpoint directory holds a _SUCCESS marker is skipped on
 re-run (resume); outputs are deterministic, so a resumed run produces
 byte-identical tables (asserted by tests/test_pipeline.py).
@@ -29,7 +31,7 @@ from pyspark.sql import functions as F
 
 from .operators.clean import clean_pages
 from .operators.detect import detect_mentions
-from .operators.extract import extract_triples_inline
+from .operators.extract import extract_triples
 from .operators.link import link_entities
 from .operators.mask import mask_triples
 from .sources.catalog import TableCatalog
@@ -40,16 +42,29 @@ LINEAGE_SCHEMA = (
 )
 
 
+def _clean(pages: DataFrame) -> DataFrame:
+    # html is consumed by S1 and dropped from the checkpoint: the clean
+    # text is the contract downstream (and the bytes would double the
+    # checkpoint footprint at scale)
+    return clean_pages(pages).drop("html")
+
+
+# (stage, operator, upstream stage); None is the raw pages. The order is
+# the dataflow: run(stop_after=...) truncates it, nothing reorders it.
+STAGES = (
+    ("clean_pages", _clean, None),
+    ("mentions", detect_mentions, "clean_pages"),
+    ("triples", extract_triples, "mentions"),
+    ("entities", link_entities, "mentions"),
+    ("triples_masked", mask_triples, "triples"),
+)
+
+
 @dataclass
 class PipelineConfig:
     root: str
     n_buckets: int = 64
     run_id: str = "run-0"
-    # stage ORDER is the dataflow itself (run() wires the dependencies);
-    # use run(stop_after=...) to truncate — a configurable stage list
-    # would only misleadingly suggest stages can be reordered
-    partitioned: tuple[str, ...] = ("clean_pages", "mentions", "triples",
-                                    "triples_masked")
     executed: list[str] = field(default_factory=list)
     skipped: list[str] = field(default_factory=list)
 
@@ -88,7 +103,7 @@ class Pipeline:
 
     def _write(self, stage: str, df: DataFrame, input_rows: int | None) -> None:
         t0 = time.perf_counter()
-        if stage in self.cfg.partitioned:
+        if "url" in df.columns:
             df = with_bucket(df, self.cfg.n_buckets)
             # one shuffle keyed the same way the table is laid out:
             # 1 file per (lang, bucket) partition
@@ -108,9 +123,8 @@ class Pipeline:
     ) -> None:
         out = self.catalog.read(self.spark, stage)
         if input_rows is None:
-            # 1:1 stages (clean): input rows == output rows; counting the
-            # checkpointed parquet is cheap, counting the LIVE upstream
-            # plan would re-execute the whole corpus CTE a second time
+            # S1 reads the raw pages, not a checkpoint, and is 1:1:
+            # counting its output beats re-executing the live page plan
             input_rows = out.count()
         per_part = (
             with_bucket(out, self.cfg.n_buckets)
@@ -126,9 +140,6 @@ class Pipeline:
             )
         )
         self.catalog.write(per_part, "lineage", mode="append")
-
-    def _read(self, stage: str) -> DataFrame:
-        return self.catalog.read(self.spark, stage)
 
     def _ensure_lineage(self, stage: str) -> None:
         """Crash-recovery: a kill between a checkpoint's _SUCCESS and its
@@ -147,54 +158,30 @@ class Pipeline:
                 return
         self._append_lineage(stage, -1, 0)
 
-    def _stage(
-        self,
-        stage: str,
-        build,
-        upstream: DataFrame,
-        one_to_one: bool = False,
-    ) -> DataFrame:
-        if self.catalog.exists(self.spark, stage):
-            self.cfg.skipped.append(stage)
-            self._ensure_lineage(stage)
-            return self._read(stage)
-        # 1:1 stages take input_rows from the (cheap) checkpointed output
-        # instead of force-evaluating a live upstream plan twice
-        n_in = None if one_to_one else upstream.count()
-        self._write(stage, build(upstream), n_in)
-        return self._read(stage)
-
     # -- the pipeline --------------------------------------------------------
 
     def run(self, pages: DataFrame, stop_after: str | None = None) -> dict:
-        """Run (or resume) all stages; returns {stage: DataFrame}.
-        `stop_after` simulates a mid-run failure for resume tests."""
+        """Run (or resume) the stages in `STAGES` order; returns
+        {stage: checkpointed DataFrame}. `stop_after` names the last stage
+        to run (it simulates a mid-run failure for resume tests)."""
+        names = [stage for stage, _, _ in STAGES]
+        if stop_after is not None and stop_after not in names:
+            raise ValueError(
+                f"stop_after must be one of {names}, got {stop_after!r}"
+            )
         out: dict[str, DataFrame] = {}
-        # html is consumed by S1 and dropped from the checkpoint: the clean
-        # text is the contract downstream (and the bytes would double the
-        # checkpoint footprint at scale)
-        clean = self._stage(
-            "clean_pages", lambda p: clean_pages(p).drop("html"), pages,
-            one_to_one=True,
-        )
-        out["clean_pages"] = clean
-        if stop_after == "clean_pages":
-            return out
-        mentions = self._stage("mentions", detect_mentions, clean)
-        out["mentions"] = mentions
-        if stop_after == "mentions":
-            return out
-        # S3 reuses the fused zero-shuffle path over clean text; the
-        # checkpointed mentions table remains available for ad-hoc queries
-        triples = self._stage("triples", extract_triples_inline, clean)
-        out["triples"] = triples
-        if stop_after == "triples":
-            return out
-        entities = self._stage("entities", link_entities, mentions)
-        out["entities"] = entities
-        if stop_after == "entities":
-            return out
-        out["triples_masked"] = self._stage("triples_masked", mask_triples, triples)
+        for stage, operator, upstream in STAGES:
+            if self.catalog.exists(self.spark, stage):
+                self.cfg.skipped.append(stage)
+                self._ensure_lineage(stage)
+            elif upstream is None:
+                self._write(stage, operator(pages), None)
+            else:
+                src = out[upstream]
+                self._write(stage, operator(src), src.count())
+            out[stage] = self.catalog.read(self.spark, stage)
+            if stage == stop_after:
+                break
         return out
 
     def lineage(self) -> DataFrame:

@@ -229,6 +229,25 @@ def test_mask_triples_stable_keys(spark):
     assert "@" in got[2]["obj"] and got[2]["obj"] != "l.w@x.com"
 
 
+def test_mask_triples_compiles_without_fallback(spark):
+    """The masking projection must compile: with the interpreted fallback
+    off, a generated method over the JVM's 64 KB limit raises instead of
+    silently running interpreted."""
+    t = spark.createDataFrame(
+        [
+            (1, "James Smith", "works_at", "Acme Corp", 1.0),
+            (2, "Laura Walsh", "has_phone", "(305) 123-4567", 1.0),
+        ],
+        "doc_id bigint, subj string, pred string, obj string, score double",
+    )
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        rows = mask_triples(t).collect()
+    finally:
+        spark.conf.unset("spark.sql.codegen.fallback")
+    assert len(rows) == 2
+
+
 def test_strhash_python_sql_parity(spark):
     from nerpii_spark.functions.hashing import sql_strhash
 

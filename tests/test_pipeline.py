@@ -93,6 +93,8 @@ def test_lineage_partition_counts(spark, tmp_root):
     assert sum(r["rows_out"] for r in rows) == out["triples"].count()
     assert all(r["wall_ms"] >= 0 for r in rows)
     assert all(0 <= r["partition_id"] < 8 for r in rows)
+    # S3 reads the mentions checkpoint, so its input is the mentions table
+    assert {r["input_rows"] for r in rows} == {out["mentions"].count()}
     # partitioned layout on disk: lang=... / bucket=... directories
     import os
 
@@ -123,3 +125,10 @@ def test_lineage_backfill_after_crash(spark, tmp_root):
     p3 = Pipeline(spark, PipelineConfig(root=tmp_root, run_id="c3"))
     p3.run(pages, stop_after="mentions")
     assert p3.lineage().where(F.col("run_id") == "c3").count() == 0
+
+
+def test_unknown_stop_after_raises(spark, tmp_root):
+    cfg = PipelineConfig(root=tmp_root, n_buckets=8, run_id="typo")
+    with pytest.raises(ValueError, match="stop_after"):
+        Pipeline(spark, cfg).run(_pages(spark, 5), stop_after="mention")
+    assert cfg.executed == [] and cfg.skipped == []
