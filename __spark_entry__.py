@@ -359,10 +359,11 @@ def q_cocitation(spark, sf):
 
 def q_host_components(spark, sf):
     """Weakly-connected components of the extracted host graph
-    (webgraph.host_components): min-label propagation over the
-    small-diameter host graph, per-round localCheckpoint; oracle = true
-    WCC over the planted link set via a recursive min-label CTE — an
-    independent formulation, so a split or merged component fails."""
+    (webgraph.host_components): large-star / small-star contraction
+    (link.connected_components), O(log n) rounds with per-half-round
+    localCheckpoint; oracle = true WCC over the planted link set via a
+    recursive min-label CTE — an independent formulation, so a split
+    or merged component fails."""
     return WG.host_components(_pipeline(spark, sf)["pages"])
 
 
@@ -1173,24 +1174,13 @@ def q_triple_typecheck(spark, sf):
 
 
 def q_cc_bigstar(spark, sf):
-    """Host-graph connected components via the ALTERNATING large-star /
-    small-star algorithm (link.connected_components_twophase, Kiveris
-    et al. 2014) — O(log n) shuffle rounds regardless of graph DIAMETER,
-    the scale companion to q_host_components' min-label propagation
-    (O(diameter) rounds; right for hub-contracted host graphs, wrong
-    for redirect filaments). Same deterministic output contract
-    (component = min host), so the oracle is the SAME independent
-    recursive-CTE true-WCC the propagation query is graded on — two
-    different distributed algorithms certified against one ground
-    truth."""
-    e = WG.distinct_host_edges(_pipeline(spark, sf)["pages"])
-    edges = e.select(F.col("u").alias("sid_a"), F.col("v").alias("sid_b"))
-    nodes = (
-        e.select(F.col("u").alias("sid")).union(e.select("v")).distinct()
-    )
-    return L.connected_components_twophase(nodes, edges).select(
-        F.col("sid").alias("host"), F.col("label").alias("component")
-    )
+    """Host-graph connected components (webgraph.host_components), kept
+    under its own name as the large-star / small-star entry of the
+    contract: link.connected_components (Kiveris et al. 2014) reaches
+    the component minima in O(log n) shuffle rounds regardless of graph
+    DIAMETER and raises on an exhausted round budget. Oracle = the same
+    independent recursive-CTE true WCC q_host_components is graded on."""
+    return WG.host_components(_pipeline(spark, sf)["pages"])
 
 
 def q_collocations(spark, sf):
@@ -3487,7 +3477,8 @@ def q_boruvka_msf(spark, sf):
     (webgraph.boruvka_msf, Boruvka 1926 — THE parallel MST algorithm):
     per round every component grabs its cheapest outgoing edge under
     the (w, a, b) total order (components >= halve, O(log n) rounds),
-    merged components contract via a fixed-budget min-label pass;
+    merged components contract via link.connected_components (exact
+    fixpoint; the oracle replays a fixed-budget min-label pass);
     weights are the SSSP link-mass convention. Oracle replays every
     round; pytest pins the forest == a Python Kruskal ground truth
     (unique under the total order, so two independent algorithms must

@@ -112,21 +112,6 @@ GENDER_MOSTLY_FEMALE = ["Kim", "Kelly", "Sasha", "Jody"]
 GENDER_MOSTLY_MALE = ["Terry", "Pat", "Noel", "Sidney"]
 
 
-def gender_of(name: str) -> str:
-    n = (name or "").strip().lower()
-    if n in (x.lower() for x in FIRST_FEMALE):
-        return "female"
-    if n in (x.lower() for x in FIRST_MALE):
-        return "male"
-    if n in (x.lower() for x in GENDER_MOSTLY_FEMALE):
-        return "mostly_female"
-    if n in (x.lower() for x in GENDER_MOSTLY_MALE):
-        return "mostly_male"
-    if n in (x.lower() for x in GENDER_ANDY):
-        return "andy"
-    return "unknown"
-
-
 # ---------------------------------------------------------------------------
 # Italian locale (reference lang='it': Faker(['it_IT']) faker_generator.py:85,
 # it spaCy/Presidio engine named_entity_recognizer.py:359-376). These lists

@@ -54,22 +54,6 @@ from {doc_rel} where doc_id % 7 = 3
 """
 
 
-def golden_dup_pairs_sql(doc_rel: str = "documents") -> str:
-    """Ground-truth near-dup pairs (true Jaccard >= tau): all pairs within
-    each planted group {d, d+1e6?, d+2e6?} (DuckDB)."""
-    return f"""
-with members as (
-  select doc_id as gid, doc_id as id from {doc_rel}
-  union all
-  select doc_id, doc_id + {DUP_EXACT_OFF} from {doc_rel} where doc_id % 10 = 0
-  union all
-  select doc_id, doc_id + {DUP_NEAR_OFF} from {doc_rel} where doc_id % 7 = 3
-)
-select a.id as id_a, b.id as id_b
-from members a join members b on a.gid = b.gid and a.id < b.id
-"""
-
-
 # ---------------------------------------------------------------------------
 # shingles (dual dialect)
 # ---------------------------------------------------------------------------

@@ -17,10 +17,15 @@ record-linkage architecture, each stage a distributed DataFrame op:
    cannot separate true initial-variants (min J .57) from sibling names
    like "Robert X. Keller"/"Robert X. Kemp" (max J .63) — measured on the
    planted corpus — hence the token-aware score.
-3. **Connected components** (`connected_components`): GraphFrames-style
-   min-label propagation over the edge DataFrame, driver-side fixpoint
-   loop with localCheckpoint per round (Catalyst cannot express
-   iteration; lineage must be truncated — SURVEY.md §4.3).
+3. **Connected components** (`connected_components`): alternating
+   large-star / small-star contraction (Kiveris et al. 2014) over the
+   edge DataFrame — O(log n) rounds whatever the diameter, a driver-side
+   loop with localCheckpoint per half-round (Catalyst cannot express
+   iteration; lineage must be truncated — SURVEY.md §4.3) and a
+   star-forest probe per round that raises ValueError when the round
+   budget runs out, never returning a split component. It is the one CC
+   of the engine: dedup, similarity, host components and Boruvka's
+   contraction call it too.
 
 Reference parity: generalizes the per-column majority-vote entity
 assignment (named_entity_recognizer.py:432-489) from columns to corpus-
@@ -156,77 +161,19 @@ def score_pairs(
 
 
 def connected_components(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 20
-) -> DataFrame:
-    """Min-label propagation fixpoint: (sid, label). label = min sid of the
-    component. Each round is one join + one agg (one shuffle);
-    localCheckpoint truncates the iterative lineage. Converges in
-    O(diameter) rounds (planted clusters are near-cliques: 2-3)."""
-    sym = edges.select(
-        F.col("sid_a").alias("src"), F.col("sid_b").alias("dst")
-    ).union(edges.select(F.col("sid_b").alias("src"), F.col("sid_a").alias("dst")))
-    sym = sym.localCheckpoint(eager=True)
-    labels = nodes.select("sid", F.col("sid").alias("label")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym.src == labels.sid)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        # carry a change flag through the update so convergence is a
-        # filter-count on the (already materialized) checkpoint, not a
-        # second join of new-vs-old labels
-        new_labels = (
-            labels.join(nbr, labels.sid == nbr.dst, "left")
-            .select(
-                "sid",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-                (F.coalesce(F.col("nbr_min"), F.col("label")) < F.col("label"))
-                .alias("chg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.where("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
-    else:
-        # never silent: an abandoned fixpoint splits one real entity into
-        # several labels downstream
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge within {max_iter}"
-            f" iterations ({changed} labels still changing) — a component"
-            " with diameter > max_iter is returned SPLIT; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
-
-
-def connected_components_twophase(
     nodes: DataFrame, edges: DataFrame, max_rounds: int = 16
 ) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") -> (sid, label), label = min sid of the component — the
-    SAME contract as `connected_components`, reached in O(log n) rounds
-    instead of O(diameter).
+    """Connected components by alternating large-star / small-star
+    contraction (Kiveris et al. 2014, "Connected Components in MapReduce
+    and Beyond") -> (sid, label), label = min sid of the component.
+    Nodes without an edge label themselves.
 
-    Why a second CC: min-label propagation costs one shuffle round per
-    hop of graph diameter — the right plan for the near-clique entity
-    blocks and hub-contracted host graphs this repo links (diameter
-    2-4), but a redirect-chain graph, a citation path, or a filament in
-    a similarity graph can have diameter 10^3+, where propagation means
-    10^3 shuffles. The alternating algorithm contracts the graph toward
-    star forests: each round every node hooks its neighborhood onto the
-    neighborhood minimum, roughly halving tree heights, so convergence
-    is logarithmic in component size REGARDLESS of diameter.
+    Rounds are O(log n) in component size REGARDLESS of diameter: each
+    round every node hooks its neighborhood onto the neighborhood
+    minimum, roughly halving tree heights. Min-label propagation would
+    pay one shuffle round per hop of diameter — fine for the near-clique
+    entity blocks linked here (diameter 2-4), but a redirect chain, a
+    citation path or a Boruvka selection path has diameter 10^2+.
 
     Semantics per round over the canonical edge state (u, v), u > v
     (child above parent — every undirected edge stored once):
@@ -238,19 +185,19 @@ def connected_components_twophase(
         x itself re-hook to m = min(smaller neighbors) — one min agg
         over the canonical rows (already child-keyed, no symmetric
         expansion) + one join, self-loop (m, m) dropped.
-    Fixpoint = star forest: no parent is itself a child, checked with
-    ONE left-semi count per round; centers are then exactly the
-    component minima (the paper's invariant), so the output is
-    deterministic and identical to `connected_components` — a pytest
-    asserts equality on a long-path graph both algorithms can solve
-    and on random graphs.
+    Fixpoint = star forest: every child has exactly one parent and no
+    parent is itself a child, checked with ONE map-side-combined count
+    per round; each component is then one star whose center is its
+    minimum (u > v on every edge), so the output is deterministic. A
+    budget that runs out before the star forest raises ValueError — a
+    truncated run would split one component into several labels.
 
     Scale shape: per round two min aggs (both map-side combine — a hub
     node's million neighbors arrive at its reducer as one partial per
-    task) + two equi-joins keyed on node ids, distinct() to re-canonicalize
-    (the same dedup every BFS/CC round pays), localCheckpoint per round
-    (Catalyst cannot express iteration; lineage must be truncated). The
-    driver holds one convergence count per round — never an edge."""
+    task) + two equi-joins keyed on node ids, distinct() to re-canonicalize,
+    localCheckpoint per half-round (Catalyst cannot express iteration;
+    lineage must be truncated — SURVEY.md §4.3). The driver holds one
+    convergence count per round — never an edge."""
     e = (
         edges.where(F.col("sid_a") != F.col("sid_b"))
         .select(
@@ -286,23 +233,28 @@ def connected_components_twophase(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        # converged iff star forest: no parent is itself a child
+        # converged iff star forest: every child has ONE parent and no
+        # parent is itself a child. "No parent is a child" alone is not
+        # enough: the path 1-3-4-5-2 reaches {3->1, 3->2, 4->1, 5->2}
+        # after one round — two roots in one component, node 3 twice.
         pending = (
-            e.join(e.select(F.col("u").alias("v2")), e.v == F.col("v2"),
-                   "left_semi")
+            e.select(F.col("u").alias("n"), F.lit(1).alias("c"))
+            .unionAll(e.select(F.col("v").alias("n"), F.lit(0).alias("c")))
+            .groupBy("n")
+            .agg(F.sum("c").alias("as_child"), F.count("*").alias("k"))
+            .where(
+                (F.col("as_child") > 1)
+                | ((F.col("as_child") == 1) & (F.col("k") > 1))
+            )
             .count()
         )
         if pending == 0:
             break
     else:
-        import warnings
-
-        warnings.warn(
-            "connected_components_twophase did not reach a star forest"
-            f" within {max_rounds} rounds ({pending} non-star edges) —"
-            " components may be returned SPLIT; raise max_rounds",
-            RuntimeWarning,
-            stacklevel=2,
+        raise ValueError(
+            "connected_components did not reach a star forest within"
+            f" {max_rounds} rounds ({pending} non-star nodes); the"
+            " components would be returned SPLIT — raise max_rounds"
         )
     labels = e.select(F.col("u").alias("sid"), F.col("v").alias("label"))
     return (

@@ -94,19 +94,6 @@ def _norm(a: str) -> str:
     return f"sqrt({_dot(a, a)})"
 
 
-def with_cosine(pairs: DataFrame, a: str = "qv", b: str = "cv") -> DataFrame:
-    """Quantized cosine (6 dp) — deterministic ranking across engines.
-    Prefer the precomputed-norm path (with_norm + cosine_expr) on hot
-    joins: this convenience form evaluates THREE interpreted HOF folds
-    per candidate pair."""
-    return pairs.withColumn(
-        "cos",
-        F.round(
-            F.expr(f"{_dot(a, b)} / ({_norm(a)} * {_norm(b)})"), 6
-        ),
-    )
-
-
 def with_norm(df: DataFrame, vec_col: str, out: str) -> DataFrame:
     """Precompute a vector's norm ONCE per row (one HOF fold) so the
     pairwise scorer evaluates only the dot product per candidate —

@@ -313,14 +313,15 @@ def host_components(pages: DataFrame) -> DataFrame:
     numbers are only comparable within a component, and a crawl whose
     host graph fragments into many components usually lost a seed list.
 
-    Scale shape: reuses link.connected_components (min-label propagation,
-    one join + one map-side-combined agg per round, per-round
-    localCheckpoint). Propagation converges in O(diameter) rounds — on
-    HOST graphs that is small by construction (the web's host graph is
-    small-world; here every page links one of 13 hub hosts, so the
-    planted diameter is ~4). For a graph with unbounded diameter the
-    right tool is the pointer-doubling shape (resolve_redirects);
-    min-label is the cheaper plan when diameter is known-small.
+    Scale shape: reuses link.connected_components (large-star /
+    small-star contraction: two map-side-combined min aggs + two
+    node-keyed joins per round, per-half-round localCheckpoint, a
+    star-forest probe that raises on an exhausted budget). Rounds are
+    O(log n) whatever the diameter, so a crawl whose host graph is a
+    long filament costs no more rounds than the small-world planted
+    graph (every page links one of 13 hub hosts, diameter ~4). On the
+    sf0.01 host graph it ran 50 Spark jobs where min-label propagation
+    ran 70, at the same wall.
 
     The DuckDB oracle recomputes true components over the PLANTED link
     set via a recursive min-label CTE — an independent formulation, so a
@@ -3485,13 +3486,10 @@ e{r} as materialized (
 # cheap) and drops redundant navigation.
 
 MST_ROUNDS = 6       # outer rounds: components >= halve/round (sf0.1 needs 5; early break when done)
-MST_CC_ROUNDS = 8    # inner min-label rounds contracting merged comps
-MST_CC_CAP = 64      # adaptive-contraction hard cap before raising (r5)
+MST_CC_ROUNDS = 8    # min-label contraction budget of the DuckDB replay
 
 
-def boruvka_msf(pages: DataFrame,
-                n_rounds: int = MST_ROUNDS,
-                cc_rounds: int = MST_CC_ROUNDS) -> DataFrame:
+def boruvka_msf(pages: DataFrame, n_rounds: int = MST_ROUNDS) -> DataFrame:
     """Minimum spanning forest -> (a, b, w) selected edges. Weights:
     w = 1e6 div (1 + n_links(a,b)) + 1 over the undirected host graph
     (link multiplicity summed over both directions), ties broken by
@@ -3502,12 +3500,11 @@ def boruvka_msf(pages: DataFrame,
     the edge table carries its endpoint component labels, ONE
     map-side-combined min(struct(w, a, b)) per component selects each
     component's cheapest outgoing edge (proposed from both endpoints),
-    merged components contract via ADAPTIVE-CHUNKED min-label pointer
-    jumping under a verified fixpoint probe (escalating to MST_CC_CAP
-    iterations, raising loudly past the cap), and newly
-    intra-component edges are PRUNED so later rounds scan a
-    geometrically shrinking edge set.  pytest pins the planted
-    graph's forest == a Python Kruskal ground truth.
+    merged components contract via link.connected_components over the
+    selected comp-level edges, and newly intra-component edges are
+    PRUNED so later rounds scan a geometrically shrinking edge set.
+    pytest pins the planted graph's forest == a Python Kruskal ground
+    truth.
 
     Scale: O(log n) outer rounds by the halving argument; every
     aggregation map-side combines; no driver-side data beyond the
@@ -3527,41 +3524,41 @@ def boruvka_msf(pages: DataFrame,
             ).alias("w"),
         )
     )
-    return msf_from_weighted_edges(e, n_rounds=n_rounds,
-                                   cc_rounds=cc_rounds)
+    return msf_from_weighted_edges(e, n_rounds=n_rounds)
 
 
 def msf_from_weighted_edges(weighted: DataFrame,
-                            n_rounds: int = MST_ROUNDS,
-                            cc_rounds: int = MST_CC_ROUNDS) -> DataFrame:
+                            n_rounds: int = MST_ROUNDS) -> DataFrame:
     """Boruvka MSF core over an arbitrary (a, b, w) edge table with
     a < b and a strict (w, a, b) total order — the graph-independent
     seam boruvka_msf delegates to (and the unit-test entry point for
     adversarial selection shapes the planted corpus never produces,
     e.g. a monotone chain whose round-1 selection is one long path).
 
-    Round-5 shape (VERDICT r4 #3): the edge table CARRIES its endpoint
-    component labels (ca, cb) instead of re-joining a node-level label
-    table every round — after each contraction the surviving
-    cross-component edges are relabeled through the comp-level map m
-    (two joins against a component-count-sized table) and intra-
-    component edges are PRUNED, so by Boruvka's halving argument every
-    later round decorates a geometrically shrinking edge set.  The
-    node-level label table is gone entirely: only edges and comp-level
-    maps ever shuffle.
+    The edge table CARRIES its endpoint component labels (ca, cb)
+    instead of re-joining a node-level label table every round — after
+    each contraction the surviving cross-component edges are relabeled
+    through the comp-level map m (two joins against a
+    component-count-sized table) and intra-component edges are PRUNED,
+    so by Boruvka's halving argument every later round decorates a
+    geometrically shrinking edge set. Only edges and comp-level maps
+    ever shuffle.
 
-    Contraction is ADAPTIVE with a verified fixpoint (ADVICE r4): the
-    probe guarantees labels are constant per selection-component before
-    any round completes, so the emitted forest can never contain an
-    intra-component (cycle-forming) edge.  DuckDB-oracle parity: the
-    replay runs the FIXED cc_rounds budget, and a verified fixpoint is
-    budget-independent (extra iterations are no-ops), so the two agree
-    exactly whenever the oracle's budget suffices — verified
-    empirically for the contract graphs at all three sf scales by
-    capping escalation at the oracle budget (pytest
-    test_boruvka_corpus_converges_within_oracle_budget pins it), while
-    a shortfall on other inputs surfaces as a loud check_oracle
-    divergence instead of two silently-agreeing wrong answers."""
+    Contraction is one link.connected_components call over the round's
+    selected comp-level edges: m(c) = the min comp reachable from c
+    through this round's selections, a true fixpoint reached in
+    O(log n) star-contraction rounds whatever the selection path's
+    diameter (a monotone chain's first round selects every edge, one
+    long path), and an exhausted CC budget raises instead of emitting a
+    cycle-forming edge. DuckDB-oracle parity: the replay contracts with a FIXED
+    MST_CC_ROUNDS min-label + pointer-jump budget, so the two agree
+    exactly whenever that budget reaches the fixpoint — pytest
+    (test_boruvka_corpus_converges_within_oracle_budget) pins the
+    contract corpus edge-for-edge, and a shortfall on other inputs
+    surfaces as a loud check_oracle divergence instead of two
+    silently-agreeing wrong answers."""
+    from nerpii_spark.operators.link import connected_components
+
     e = weighted.select("a", "b", "w").localCheckpoint(eager=True)
     # dec: surviving cross-component edges decorated with their current
     # endpoint components.  Initially every node is its own component
@@ -3592,95 +3589,27 @@ def msf_from_weighted_edges(weighted: DataFrame,
         picked = sel.select("a", "b", "w")
         forest = (picked if forest is None
                   else forest.unionByName(picked).distinct())
-        # contract: min-label propagation over comp-level selected edges
-        ce = sel.select(F.col("ca").alias("x"), F.col("cb").alias("y"))
-        sym = (
-            ce.unionAll(
-                ce.select(F.col("y").alias("x"), F.col("x").alias("y"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
+        # contract over the COMPONENT graph.  Every comp with a
+        # surviving cross edge proposed an edge, so the selected edges'
+        # endpoints cover every comp that needs relabeling; untouched
+        # comps have no dec edges left either.
+        ce = sel.select(F.col("ca").alias("sid_a"),
+                        F.col("cb").alias("sid_b"))
+        comps = (
+            ce.select(F.col("sid_a").alias("sid"))
+            .union(ce.select("sid_b")).distinct()
         )
-        # contraction runs over the COMPONENT graph: m(c) converges to
-        # the min label reachable from c through this round's
-        # selections.  Every comp with a surviving cross edge proposed
-        # an edge, so nodes(sym) covers every comp that needs
-        # relabeling; untouched comps have no dec edges left either.
-        m = (
-            sym.select(F.col("x").alias("comp")).distinct()
-            .withColumn("lbl", F.col("comp"))
-        )
-        # ADAPTIVE-CHUNKED contraction (VERDICT r4 #3 + ADVICE r4): run
-        # chunks of LAZY min-label iterations (each combines the
-        # one-hop neighbor min with a POINTER JUMP lbl <- lbl[lbl];
-        # min-label is monotone so jumping through the current chain
-        # gives log-diameter convergence), checkpoint the chunk, then
-        # PROBE the pinned map for the fixpoint: at fixpoint the label
-        # is constant across every sym edge (a differing edge would
-        # strictly decrease one side next iteration, and edge-constancy
-        # makes the pointer jump a no-op too).  Typical selection
-        # graphs converge inside the first half-budget chunk, so the
-        # common path executes cc_rounds/2 iterations + one tiny probe
-        # join instead of the full fixed budget (pinned-16 re-measure
-        # r5: ~16 s -> single-chunk rounds, see BENCH/BASELINE.md);
-        # adversarial diameters (chain-shaped round-1 selections exist:
-        # test_wave32 chain gate) ESCALATE with doubling chunks up to
-        # MST_CC_CAP total iterations before raising — stronger than
-        # the old silent fixed budget, whose shortfall the DuckDB
-        # oracle (same budget) could never surface.  Each iteration
-        # references m only TWICE, keeping lazy-plan growth at
-        # 2^chunk per chunk (a third reference measured 3^8 subplan
-        # copies: minutes of driver-side analysis on microscopic
-        # data); the checkpoint between chunks resets the depth.
-        done_iters = 0
-        chunk = max(1, cc_rounds // 2)
-        while True:
-            for _i in range(chunk):
-                edges = sym.unionAll(
-                    m.select(F.col("comp").alias("x"),
-                             F.col("lbl").alias("y"))
-                )
-                m = (
-                    edges.join(
-                        m.select(F.col("comp").alias("y"),
-                                 F.col("lbl").alias("ly")),
-                        "y",
-                    )
-                    .groupBy("x")
-                    .agg(F.min("ly").alias("lbl"))
-                    .select(F.col("x").alias("comp"), "lbl")
-                )
-            m = m.localCheckpoint(eager=True)
-            done_iters += chunk
-            at_fixpoint = (
-                sym.join(m.select(F.col("comp").alias("x"),
-                                  F.col("lbl").alias("lx")), "x")
-                .join(m.select(F.col("comp").alias("y"),
-                               F.col("lbl").alias("ly")), "y")
-                .where(F.col("lx") != F.col("ly"))
-                .isEmpty()
-            )
-            if at_fixpoint:
-                break
-            if done_iters >= MST_CC_CAP:
-                raise ValueError(
-                    "msf_from_weighted_edges: min-label contraction did "
-                    f"not reach a fixpoint within {done_iters} "
-                    "iterations; the selection-path diameter of this "
-                    "edge table exceeds the pointer-jump cap "
-                    f"(MST_CC_CAP={MST_CC_CAP})"
-                )
-            chunk = min(done_iters, MST_CC_CAP - done_iters)
+        m = connected_components(comps, ce).localCheckpoint(eager=True)
         # prune + re-decorate: map the surviving edges' comps through
         # the comp-level contraction and DROP newly intra-component
         # edges, so the next round's argmin scans only what can still
         # be selected (geometric shrink; two comp-keyed joins against
         # the already-pinned m, no node-level table).
         dec = (
-            dec.join(m.select(F.col("comp").alias("ca"),
-                              F.col("lbl").alias("la")), "ca")
-            .join(m.select(F.col("comp").alias("cb"),
-                           F.col("lbl").alias("lb")), "cb")
+            dec.join(m.select(F.col("sid").alias("ca"),
+                              F.col("label").alias("la")), "ca")
+            .join(m.select(F.col("sid").alias("cb"),
+                           F.col("label").alias("lb")), "cb")
             .where(F.col("la") != F.col("lb"))
             .select("a", "b", "w", F.col("la").alias("ca"),
                     F.col("lb").alias("cb"))
@@ -3696,11 +3625,11 @@ def duck_boruvka_msf_sql(pages_sql_duck: str,
     """Chained-CTE replay of boruvka_msf: identical weights, per-round
     cross-component arg-min (row_number over the same (w, a, b) total
     order — an independent formulation of min(struct)) and a FIXED
-    cc_rounds min-label contraction.  The Spark side contracts
-    adaptively to a VERIFIED fixpoint, which is budget-independent, so
-    this fixed replay agrees exactly on every graph converging within
-    cc_rounds (probe-verified for the contract graphs; see
-    msf_from_weighted_edges).  Spark's early exit on an empty
+    cc_rounds min-label + pointer-jump contraction.  The Spark side
+    contracts to the exact components (link.connected_components, a
+    verified fixpoint), so this fixed replay agrees exactly on every
+    graph whose selections converge within cc_rounds (pinned for the
+    contract corpus by pytest; see msf_from_weighted_edges).  Spark's early exit on an empty
     cross-component round is a no-op here (empty CTEs flow through).
     Every CTE MATERIALIZED (the duck_random_walks_sql planning note)."""
     ctes = [f"""
@@ -3760,7 +3689,8 @@ m{r}_0 as materialized (
 )""")
         for i in range(1, cc_rounds + 1):
             # neighbor min + pointer jump via the self-label edge
-            # (c, lbl(c)) — the exact mirror of the Spark inner loop
+            # (c, lbl(c)) — an independent formulation of the Spark
+            # star contraction; both fixpoints are the component minima
             ctes.append(f"""
 m{r}_{i} as materialized (
   select e.x as comp, min(mm.lbl) as lbl

@@ -216,10 +216,6 @@ def page_html(text: str, doc_id: int) -> bytes:
     ).encode("utf-8")
 
 
-def page_url(doc_id: int, lang: str) -> str:
-    return f"https://site{h1(doc_id, 0) % 977}.example/{lang}/page/{doc_id}"
-
-
 # ---------------------------------------------------------------------------
 # Dual-dialect SQL builders
 # ---------------------------------------------------------------------------

@@ -2,8 +2,10 @@
 clusters exactly (linking P/R = 1.0) and deterministically."""
 
 import re
+import warnings
 from collections import Counter, defaultdict
 
+import pytest
 from pyspark.sql import functions as F
 
 from nerpii_spark.operators.clean import clean_pages
@@ -156,6 +158,101 @@ def test_connected_components_chain(spark):
     )
     labels = {r.sid: r.label for r in connected_components(nodes, edges).collect()}
     assert labels == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4}
+    # a 500-node path (diameter 499) under the default round budget:
+    # one label, never a split with a warning
+    n = 500
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "sid bigint")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "sid_a bigint, sid_b bigint"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        labels = {
+            r.sid: r.label
+            for r in connected_components(nodes, edges).collect()
+        }
+    assert labels == {i: 0 for i in range(n)}
+
+
+def _graph(spark, n, edge_list):
+    nodes = spark.createDataFrame(
+        [(f"n{i:03d}",) for i in range(n)], "sid string"
+    )
+    edges = spark.createDataFrame(
+        [(f"n{a:03d}", f"n{b:03d}") for a, b in edge_list],
+        "sid_a string, sid_b string",
+    )
+    return nodes, edges
+
+
+def _union_find_labels(n, edge_list):
+    """Python reference: node name -> min node name of its component."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_list:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # min-root union: the root of every set is its min member
+            parent[max(ra, rb)] = min(ra, rb)
+    return {f"n{i:03d}": f"n{find(i):03d}" for i in range(n)}
+
+
+def test_connected_components_long_path(spark):
+    # an 80-node path: diameter 79 — min-label propagation would need 79
+    # rounds; star contraction must finish in far fewer
+    nodes, edges = _graph(spark, 80, [(i, i + 1) for i in range(79)])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        out = connected_components(nodes, edges, max_rounds=12)
+        got = {r["sid"]: r["label"] for r in out.collect()}
+    assert got == {f"n{i:03d}": "n000" for i in range(80)}
+
+
+def test_connected_components_raises_when_budget_too_small(spark):
+    nodes, edges = _graph(spark, 64, [(i, i + 1) for i in range(63)])
+    with pytest.raises(ValueError, match="star forest"):
+        connected_components(nodes, edges, max_rounds=1)
+
+
+def test_connected_components_equals_union_find_random(spark):
+    # seeded LCG random graph: several components, isolated nodes
+    n, s, edge_list = 120, 7, []
+    for _ in range(140):
+        s = (s * 1_103_515_245 + 12_345) % (1 << 31)
+        a = s % n
+        s = (s * 1_103_515_245 + 12_345) % (1 << 31)
+        b = s % n
+        if a != b:
+            edge_list.append((a, b))
+    # not trivial: more than one component, not all singletons
+    assert 1 < len(set(_union_find_labels(n, edge_list).values())) < n
+    graphs = [
+        (n, edge_list),
+        # after one round no parent of this path is a child, yet node 3
+        # still hangs off two roots
+        (6, [(1, 3), (3, 4), (4, 5), (5, 2)]),
+    ]
+    for n, edge_list in graphs:
+        nodes, edges = _graph(spark, n, edge_list)
+        rows = connected_components(nodes, edges).collect()
+        assert len(rows) == n
+        got = {r["sid"]: r["label"] for r in rows}
+        assert got == _union_find_labels(n, edge_list)
+
+
+def test_connected_components_isolated_and_pair(spark):
+    nodes, edges = _graph(spark, 3, [(1, 2)])
+    got = {
+        r["sid"]: r["label"]
+        for r in connected_components(nodes, edges).collect()
+    }
+    assert got == {"n000": "n000", "n001": "n001", "n002": "n001"}
 
 
 def test_lsh_bucket_cap(spark):

@@ -7,11 +7,13 @@ the MST is unique under a strict total order, so two different
 algorithms must agree exactly. The SN gate hand-checks window pairs
 and the normalization fold."""
 
+import duckdb
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from nerpii_spark.operators import link as L
 from nerpii_spark.operators import webgraph as WG
+from nerpii_spark.sources import pages as P
 
 SF = "/root/testdata/sf0.001"
 
@@ -37,19 +39,23 @@ def _kruskal(edges):
 
 
 def test_boruvka_corpus_converges_within_oracle_budget(spark):
-    """DuckDB-oracle parity guard: the SQL replay contracts with a
-    FIXED cc_rounds=8 budget while Spark escalates adaptively, so the
-    two agree only when the contract graph converges within 8 inner
-    iterations per round.  Capping the escalation at the oracle budget
-    must therefore complete without raising (verified at all three sf
-    scales in r5; this pins the cheapest one)."""
-    old_cap = WG.MST_CC_CAP
-    WG.MST_CC_CAP = WG.MST_CC_ROUNDS
-    try:
-        pages = E._pipeline(spark, SF)["pages"]
-        assert WG.boruvka_msf(pages).count() > 0
-    finally:
-        WG.MST_CC_CAP = old_cap
+    """DuckDB-oracle parity: the SQL replay contracts each round with a
+    FIXED MST_CC_ROUNDS min-label + pointer-jump budget while Spark
+    contracts to the exact components, so the two agree only when the
+    contract graph's selections converge within that budget. Spark's
+    forest must equal the replay edge-for-edge."""
+    pages = E._pipeline(spark, SF)["pages"]
+    got = {
+        (r["a"], r["b"], r["w"]) for r in WG.boruvka_msf(pages).collect()
+    }
+    con = duckdb.connect()
+    con.sql(
+        f"create view documents as select * from '{SF}/documents.parquet'"
+    )
+    want = set(
+        con.sql(WG.duck_boruvka_msf_sql(P.pages_sql("duck"))).fetchall()
+    )
+    assert got and got == want
 
 
 def test_boruvka_equals_kruskal_on_corpus(spark):
@@ -84,10 +90,10 @@ def test_boruvka_chain_selection_converges_with_pointer_jump(spark):
     # chain h00-h01-...-h39 where round 1 selects EVERY edge (node i's
     # cheapest incident edge is its left edge; node 0 picks its right)
     # -> the selected pseudo-forest is one path of label-prop diameter
-    # 39, far past the cc_rounds=8 one-hop budget. Pointer jumping
-    # (lbl <- lbl[lbl] each iteration) converges in ceil(log2(39)) < 8
-    # rounds; without it labels stall and a later round can select an
-    # intra-component edge, breaking the forest invariant below.
+    # 39, far past an 8-round one-hop budget. The contraction must reach
+    # the exact components (star contraction: O(log n) rounds); a
+    # stalled label would let a later round select an intra-component
+    # edge, breaking the forest invariant below.
     n = 40
     rows = [(f"h{i:02d}", f"h{i + 1:02d}", 100 + i) for i in range(n - 1)]
     e = spark.createDataFrame(rows, "a string, b string, w bigint")
@@ -103,11 +109,11 @@ def test_boruvka_chain_selection_converges_with_pointer_jump(spark):
 def test_boruvka_long_chain_escalates_past_fixed_budget(spark):
     # ADVICE r4 regression: a monotone chain of 600 nodes whose round-1
     # selection is one 599-edge path needs ~log2(599) > 9 pointer-jump
-    # iterations — MORE than the old fixed cc_rounds=8 budget, which
-    # silently left the path under-contracted (reproduced on the x100
-    # bench corpus host graph, where the probe fired).  The adaptive
-    # contraction escalates chunks (4, +4, +8, ...) under the verified
-    # fixpoint probe and must still emit the exact Kruskal forest.
+    # iterations — MORE than the fixed 8-iteration budget the DuckDB
+    # replay uses, which silently left the path under-contracted
+    # (reproduced on the x100 bench corpus host graph).  The Spark
+    # contraction runs connected_components to its star-forest fixpoint
+    # and must emit the exact Kruskal forest.
     n = 600
     rows = [(f"h{i:03d}", f"h{i + 1:03d}", 100 + i) for i in range(n - 1)]
     e = spark.createDataFrame(rows, "a string, b string, w bigint")

@@ -1,10 +1,7 @@
-"""Wave-4 operators: two-phase CC, fixed-point log2 + weighted
-reservoir sampling, Dice collocations, triple domain/range typecheck."""
-
-import warnings
+"""Wave-4 operators: fixed-point log2 + weighted reservoir sampling,
+Dice collocations, triple domain/range typecheck."""
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from nerpii_spark.functions.hashing import M, hn
@@ -15,69 +12,6 @@ from nerpii_spark.functions.intmath import (
     log2fp,
     spark_log2fp_cols,
 )
-from nerpii_spark.operators.link import (
-    connected_components,
-    connected_components_twophase,
-)
-
-
-def _graph(spark, n, edge_list):
-    nodes = spark.createDataFrame(
-        [(f"n{i:03d}",) for i in range(n)], "sid string"
-    )
-    edges = spark.createDataFrame(
-        [(f"n{a:03d}", f"n{b:03d}") for a, b in edge_list],
-        "sid_a string, sid_b string",
-    )
-    return nodes, edges
-
-
-def test_twophase_cc_long_path(spark):
-    # an 80-node path: diameter 79 — min-label propagation needs 79
-    # rounds; the alternating algorithm must finish in far fewer
-    nodes, edges = _graph(spark, 80, [(i, i + 1) for i in range(79)])
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        out = connected_components_twophase(nodes, edges, max_rounds=12)
-        got = {r["sid"]: r["label"] for r in out.collect()}
-    assert got == {f"n{i:03d}": "n000" for i in range(80)}
-
-
-def test_twophase_cc_warns_when_budget_too_small(spark):
-    nodes, edges = _graph(spark, 64, [(i, i + 1) for i in range(63)])
-    with pytest.warns(RuntimeWarning, match="star forest"):
-        connected_components_twophase(nodes, edges, max_rounds=1)
-
-
-def test_twophase_cc_equals_minlabel_random(spark):
-    # seeded LCG random graph: several components, isolated nodes
-    n, s, edge_list = 120, 7, []
-    for _ in range(140):
-        s = (s * 1_103_515_245 + 12_345) % (1 << 31)
-        a = s % n
-        s = (s * 1_103_515_245 + 12_345) % (1 << 31)
-        b = s % n
-        if a != b:
-            edge_list.append((a, b))
-    nodes, edges = _graph(spark, n, edge_list)
-    ref = {
-        r["sid"]: r["label"]
-        for r in connected_components(nodes, edges, max_iter=100).collect()
-    }
-    got = {
-        r["sid"]: r["label"]
-        for r in connected_components_twophase(nodes, edges).collect()
-    }
-    assert got == ref
-
-
-def test_twophase_cc_isolated_and_pair(spark):
-    nodes, edges = _graph(spark, 3, [(1, 2)])
-    got = {
-        r["sid"]: r["label"]
-        for r in connected_components_twophase(nodes, edges).collect()
-    }
-    assert got == {"n000": "n000", "n001": "n001", "n002": "n001"}
 
 
 def test_log2fp_three_way(spark):

@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import sys
 from collections import Counter
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# certify THIS checkout's engine, wherever it lives
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
