@@ -16,6 +16,8 @@ every write goes through the TableCatalog):
 
 bucket = pmod(xxhash64(url), n_buckets) — the north_rule partitioning key;
 a table is partitioned exactly when it has a url column.
+Lineage is observed during the write (one count per bucket), so a stage
+is one checkpoint write plus one lineage append, with no count.
 A stage whose checkpoint directory holds a _SUCCESS marker is skipped on
 re-run (resume); outputs are deterministic, so a resumed run produces
 byte-identical tables (asserted by tests/test_pipeline.py).
@@ -26,8 +28,9 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators.clean import clean_pages
 from .operators.detect import detect_mentions
@@ -69,18 +72,23 @@ class PipelineConfig:
     skipped: list[str] = field(default_factory=list)
 
 
-def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    """north_rule partitioning key: pmod(xxhash64(url), N). Tables without
-    a url (e.g. entities) bucket by their canonical key instead."""
+def bucket_of(df: DataFrame, n_buckets: int) -> Column:
+    """north_rule partitioning key, pmod(xxhash64(url), N): a checkpoint's
+    `bucket` column. Tables without a url (e.g. entities) bucket by their
+    canonical key instead."""
     if "bucket" in df.columns:
-        return df
+        return F.col("bucket")
     key = next((c for c in ("url", "canonical") if c in df.columns), None)
-    expr = (
-        F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
-        if key
-        else F.lit(0)
-    )
-    return df.withColumn("bucket", expr)
+    if key is None:
+        return F.lit(0)
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+
+
+def bucket_counts(df: DataFrame, n_buckets: int) -> list[Column]:
+    """Lineage rows_out per bucket: observed by a stage's write, or
+    aggregated over its checkpoint by the crash-window backfill."""
+    b = bucket_of(df, n_buckets)
+    return [F.count_if(b == i).alias(f"b{i}") for i in range(n_buckets)]
 
 
 class Pipeline:
@@ -101,62 +109,48 @@ class Pipeline:
 
     # -- checkpoint plumbing -------------------------------------------------
 
-    def _write(self, stage: str, df: DataFrame, input_rows: int | None) -> None:
+    def _write(self, stage: str, df: DataFrame) -> tuple[list[int], int]:
+        """Checkpoint df as stage -> (rows per bucket, observed; wall ms)."""
         t0 = time.perf_counter()
+        n, partition_by = self.cfg.n_buckets, ()
         if "url" in df.columns:
-            df = with_bucket(df, self.cfg.n_buckets)
             # one shuffle keyed the same way the table is laid out:
             # 1 file per (lang, bucket) partition
-            self.catalog.write(
-                df.repartition("lang", "bucket"),
-                stage,
-                partition_by=("lang", "bucket"),
-            )
-        else:
-            self.catalog.write(df, stage)
-        wall_ms = int((time.perf_counter() - t0) * 1000)
-        self._append_lineage(stage, input_rows, wall_ms)
-        self.cfg.executed.append(stage)
+            partition_by = ("lang", "bucket")
+            df = df.withColumn("bucket", bucket_of(df, n))
+            df = df.repartition(*partition_by)
+        # observed on top of the written plan, in the write's result stage,
+        # where each task's update is applied once (a re-run map stage's not)
+        seen = Observation()
+        observed = df.observe(seen, *bucket_counts(df, n))
+        self.catalog.write(observed, stage, partition_by)
+        counts = list(seen.get.values())
+        if partition_by and not sum(counts):
+            # a partitioned write of no rows writes no data file, so there
+            # is no schema to read back: rewrite it as one empty file,
+            # columns in the order a partitioned read gives
+            cols = [c for c in df.columns if c not in partition_by]
+            self.catalog.write(df.select(*cols, *partition_by).limit(0), stage)
+        return counts, int((time.perf_counter() - t0) * 1000)
 
-    def _append_lineage(
-        self, stage: str, input_rows: int | None, wall_ms: int
-    ) -> None:
-        out = self.catalog.read(self.spark, stage)
-        if input_rows is None:
-            # S1 reads the raw pages, not a checkpoint, and is 1:1:
-            # counting its output beats re-executing the live page plan
-            input_rows = out.count()
-        per_part = (
-            with_bucket(out, self.cfg.n_buckets)
-            .groupBy(F.col("bucket").cast("int").alias("partition_id"))
-            .agg(F.count("*").alias("rows_out"))
-            .select(
-                F.lit(self.cfg.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                "rows_out",
-                F.lit(input_rows).cast("bigint").alias("input_rows"),
-                F.lit(wall_ms).cast("bigint").alias("wall_ms"),
-            )
-        )
-        self.catalog.write(per_part, "lineage", mode="append")
+    def _append_lineage(self, stage, counts, input_rows, wall_ms) -> None:
+        """One row per bucket from literals, with no Python worker to start."""
+        schema, run = StructType.fromDDL(LINEAGE_SCHEMA), self.cfg.run_id
+        rows = F.array(*(
+            F.struct(*map(F.lit, (run, stage, i, n, input_rows, wall_ms)))
+            for i, n in enumerate(counts)
+        ))
+        one = self.spark.range(1, numPartitions=1)
+        lin = one.select(F.inline(rows)).toDF(*schema.names).to(schema)
+        self.catalog.write(lin, "lineage", mode="append")
 
-    def _ensure_lineage(self, stage: str) -> None:
-        """Crash-recovery: a kill between a checkpoint's _SUCCESS and its
-        lineage append would otherwise leave the stage without lineage
-        under ANY run (resume skips it forever). Backfill only in that
-        case — normal resumes add no rows for skipped stages (asserted
-        by tests). input_rows = -1 marks the backfill."""
-        if self.catalog.exists(self.spark, "lineage"):
-            existing = (
-                self.catalog.read(self.spark, "lineage")
-                .where(F.col("stage") == stage)
-                .limit(1)
-                .count()
-            )
-            if existing:
-                return
-        self._append_lineage(stage, -1, 0)
+    def _backfill_lineage(self, stage: str, ckpt: DataFrame) -> None:
+        """Crash recovery: a kill between a checkpoint's _SUCCESS and its
+        lineage append would leave the stage without lineage forever. The
+        write's per-bucket counts are aggregated over the checkpoint
+        instead; input_rows = -1 marks the backfill."""
+        counts = ckpt.agg(*bucket_counts(ckpt, self.cfg.n_buckets)).first()
+        self._append_lineage(stage, list(counts), -1, 0)
 
     # -- the pipeline --------------------------------------------------------
 
@@ -170,16 +164,28 @@ class Pipeline:
                 f"stop_after must be one of {names}, got {stop_after!r}"
             )
         out: dict[str, DataFrame] = {}
+        rows: dict[str, int] = {}  # rows each stage wrote in this run
+        logged = set()  # stages with lineage: read once, on a resume
+        if self.catalog.exists(self.spark, "lineage"):
+            logged = {r[0] for r in self.lineage().select("stage").collect()}
         for stage, operator, upstream in STAGES:
             if self.catalog.exists(self.spark, stage):
                 self.cfg.skipped.append(stage)
-                self._ensure_lineage(stage)
-            elif upstream is None:
-                self._write(stage, operator(pages), None)
+                out[stage] = self.catalog.read(self.spark, stage)
+                if stage not in logged:
+                    self._backfill_lineage(stage, out[stage])
             else:
-                src = out[upstream]
-                self._write(stage, operator(src), src.count())
-            out[stage] = self.catalog.read(self.spark, stage)
+                if upstream and upstream not in rows:
+                    # skipped on resume: its checkpoint is counted once
+                    rows[upstream] = out[upstream].count()
+                src = out[upstream] if upstream else pages
+                counts, ms = self._write(stage, operator(src))
+                rows[stage] = sum(counts)  # S1 is 1:1: its own input_rows
+                self._append_lineage(
+                    stage, counts, rows[upstream or stage], ms
+                )
+                self.cfg.executed.append(stage)
+                out[stage] = self.catalog.read(self.spark, stage)
             if stage == stop_after:
                 break
         return out

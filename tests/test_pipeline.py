@@ -6,8 +6,16 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from nerpii_spark.pipeline import Pipeline, PipelineConfig
+from nerpii_spark.pipeline import (
+    LINEAGE_SCHEMA,
+    STAGES,
+    Pipeline,
+    PipelineConfig,
+    bucket_of,
+)
+from nerpii_spark.sources.catalog import TableCatalog
 from nerpii_spark.sources import pages as P
 
 from test_corpus_and_detect import base_text
@@ -21,6 +29,23 @@ def _pages(spark, n=60):
         spark.sql(P.pages_sql("spark", doc_rel="pipe_documents", with_html=True))
         .drop("text")
         .withColumn("text", F.lit(None).cast("string"))
+    )
+
+
+def _prose_pages(spark, n=20):
+    """Pages of plain prose: no detector fires, so S2 onward write zero
+    rows."""
+    prose = b"<p>the quick brown fox jumps over the lazy dog</p>"
+    rows = [(i, f"https://prose.example/en/page/{i}", prose) for i in range(n)]
+    return spark.createDataFrame(
+        rows, "doc_id bigint, url string, html binary"
+    ).select(
+        "doc_id",
+        "url",
+        F.timestamp_seconds("doc_id").alias("warc_ts"),
+        "html",
+        F.lit(None).cast("string").alias("text"),
+        F.lit("en").alias("lang"),
     )
 
 
@@ -80,6 +105,11 @@ def test_full_run_then_resume_identical(spark, tmp_root):
         r["stage"] for r in lin.where(F.col("run_id") == "r2").collect()
     }
     assert r2_stages == {"clean_pages", "mentions"}
+    # r3 skipped mentions, so triples' input_rows counts its checkpoint
+    r3_triples = lin.where(
+        (F.col("run_id") == "r3") & (F.col("stage") == "triples")
+    ).collect()
+    assert {r["input_rows"] for r in r3_triples} == {out_b["mentions"].count()}
 
 
 def test_lineage_partition_counts(spark, tmp_root):
@@ -87,6 +117,7 @@ def test_lineage_partition_counts(spark, tmp_root):
     cfg = PipelineConfig(root=tmp_root, n_buckets=8, run_id="rl")
     pipe = Pipeline(spark, cfg)
     out = pipe.run(pages, stop_after="triples")
+    assert pipe.lineage().schema == StructType.fromDDL(LINEAGE_SCHEMA)
     lin = pipe.lineage().where(F.col("stage") == "triples")
     rows = lin.collect()
     # per-partition rows_out sums to the table row count
@@ -132,3 +163,79 @@ def test_unknown_stop_after_raises(spark, tmp_root):
     with pytest.raises(ValueError, match="stop_after"):
         Pipeline(spark, cfg).run(_pages(spark, 5), stop_after="mention")
     assert cfg.executed == [] and cfg.skipped == []
+
+
+def test_stage_runs_one_job_beyond_its_write(spark, tmp_root):
+    """Lineage is observed during the checkpoint write. So against a bare
+    write of the same frame, plus the read that hands the checkpoint
+    downstream, S1 runs one more Spark job: its lineage append. It runs no
+    count and no re-read of its checkpoint."""
+    pages = _pages(spark, 20)
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def bare():
+        catalog = TableCatalog(root=tmp_root + "_bare")
+        clean = STAGES[0][1](pages)
+        frame = clean.withColumn("bucket", bucket_of(clean, 8))
+        catalog.write(
+            frame.repartition("lang", "bucket"),
+            "clean_pages",
+            partition_by=("lang", "bucket"),
+        )
+        catalog.read(spark, "clean_pages")
+
+    cfg = PipelineConfig(root=tmp_root, n_buckets=8, run_id="jobs")
+    piped = jobs(
+        "pipeline_s1",
+        lambda: Pipeline(spark, cfg).run(pages, stop_after="clean_pages"),
+    )
+    assert cfg.executed == ["clean_pages"]
+    assert piped == jobs("bare_s1", bare) + 1
+
+
+@pytest.mark.parametrize(
+    "make_pages",
+    [_prose_pages, lambda spark: _pages(spark, 10).limit(0)],
+    ids=["entity_free", "limit_0"],
+)
+def test_zero_row_stage_completes_and_resumes(spark, tmp_root, make_pages):
+    """A stage that writes zero rows leaves a checkpoint that reads back
+    with its schema: a partitioned write of no rows writes no data file,
+    so there is nothing to infer the schema from."""
+    names = [stage for stage, _, _ in STAGES]
+    pages = make_pages(spark)
+    cfg = PipelineConfig(root=tmp_root, n_buckets=8, run_id="z1")
+    out = Pipeline(spark, cfg).run(pages)
+    assert cfg.executed == names
+    assert out["mentions"].count() == 0
+    assert out["triples_masked"].count() == 0
+    # each table has its operator's columns and types, with the partition
+    # columns last, as a non-empty partitioned table reads back
+    for stage, operator, upstream in STAGES:
+        if stage == "entities":  # unpartitioned; link checkpoints eagerly
+            continue
+        made = operator(out[upstream] if upstream else pages)
+        want = [(f.name, f.dataType.simpleString()) for f in made.schema]
+        want = [c for c in want if c[0] not in ("lang", "bucket")]
+        want += [("lang", "string"), ("bucket", "int")]
+        got = [(f.name, f.dataType.simpleString()) for f in out[stage].schema]
+        assert got == want, stage
+    # a rerun executes nothing and reads every table back the same way
+    cfg2 = PipelineConfig(root=tmp_root, n_buckets=8, run_id="z2")
+    pipe2 = Pipeline(spark, cfg2)
+    out2 = pipe2.run(pages)
+    assert cfg2.executed == [] and cfg2.skipped == names
+    for stage in names:
+        assert out2[stage].schema == out[stage].schema, stage
+    lin = pipe2.lineage()
+    assert {r["stage"] for r in lin.collect()} == set(names)
+    assert lin.where(F.col("run_id") == "z2").count() == 0
