@@ -105,11 +105,24 @@ def main() -> int:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "100"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
+    import __spark_entry__ as E
+
+    # SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the timed suite (plus
+    # e2e_triples/web_graph_corpus if named) — the targeted pinned
+    # re-measure path (VERDICT r3 #2) without a 10-minute full suite
+    only = {
+        s for s in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
+        if s
+    }
+    unknown = only - {"e2e_triples", "web_graph_corpus", *E.bench_queries()}
+    if unknown:
+        print(f"ERROR: unknown bench query names: {sorted(unknown)}",
+              file=sys.stderr)
+        return 2
+
     from nerpii_spark.session import get_spark
 
     spark = get_spark(app_name=f"nerpii_bench_c{cores}", cores=cores)
-
-    import __spark_entry__ as E
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
@@ -142,173 +155,13 @@ def main() -> int:
     # rejection (the two-level scaling evidence runs fresh-process
     # best-of-N per level separately); override via env for deep runs
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    # SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the timed suite (plus
-    # e2e_triples/web_graph_corpus if named) — the targeted pinned
-    # re-measure path (VERDICT r3 #2) without a 10-minute full suite
-    only = {
-        s for s in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
-        if s
-    }
-    bench_queries = [
-        "q_triples_by_pred",
-        "q_topk_objs_per_pred",
-        "q_entities",
-        "q_dedup_minhash",
-        "q_dedup_lines",
-        "q_dedup_spans",
-        "q_url_filter",
-        "q_pack_sequences",
-        "q_quality_lm",
-        "q_quality_repetition",
-        "q_quality_classifier",
-        "q_chunk_text",
-        "q_cocitation",
-        "q_frontier",
-        "q_resolve_redirects",
-        "q_host_components",
-        "q_communities",
-        "q_crawl_depth",
-        "q_fuzzy_match",
-        "q_kcore",
-        "q_host_mirrors",
-        "q_recrawl_cadence",
-        "q_bpe_merges",
-        "q_spam_mass",
-        "q_host_reciprocity",
-        "q_bm25",
-        "q_dedup_containment",
-        "q_quality_survivors",
-        "q_type_vote",
-        "q_triple_support",
-        "q_url_normalize",
-        "q_tpch_bigorders",
-        "q_agg_lineitem",
-        "q_join_orders_customer",
-        "q_anti_join",
-        "q_cc_bigstar",
-        "q_collocations",
-        "q_sample_weighted",
-        "q_triple_typecheck",
-        "q_pagerank_weighted",
-        "q_triples_canonical",
-        "q_dedup_cluster_stats",
-        "q_hard_negatives",
-        "q_dp_counts",
-        "q_truth_discovery",
-        "q_scd2_facts",
-        "q_phrase_search",
-        "q_vocab_growth",
-        "q_split_leakage",
-        # wave-8/9 (r3 late additions)
-        "q_expectations",
-        "q_pagerank_incremental",
-        "q_bloom_semijoin",
-        "q_lsh_tuning",
-        # q_mask_leakage excluded like the other masking queries: its
-        # cost is column_profile's detection scan, benched via e2e
-        "q_host_gini",
-        "q_manifest_prune",
-        "q_compaction_plan",
-        "q_snapshot_expiry",
-        "q_reident_risk",
-        "q_generalize_ladder",
-        "q_split_temporal",
-        "q_lang_drift",
-        "q_dedup_incremental",
-        "q_window_user_hll",
-        "q_triple_eval",
-        # wave-10 (r3 continuation)
-        "q_linkage_weights",
-        "q_textrank",
-        "q_quantile_sketch",
-        "q_readability",
-        "q_itemsets",
-        "q_crawl_waves",
-        "q_extract_diag",
-        "q_encoding_health",
-        "q_span_reuse",
-        # wave-13
-        "q_cdx_index",
-        "q_fact_decay",
-        "q_minimizers",
-        "q_lang_sim_matrix",
-        "q_tpch_late",
-        "q_tpch_promo",
-        "q_agg_incremental",
-        "q_reshard_plan",
-        "q_cdc_apply",
-        "q_schema_evolution",
-        "q_rel_evidence",
-        "q_entity_salience",
-        "q_el_disambig",
-        "q_event_sequences",
-        "q_hearst",
-        "q_coref_resolve",
-        "q_community_graph",
-        # wave-17
-        "q_rule_infer",
-        "q_ner_bio",
-        "q_quotes",
-        # wave-18
-        "q_link_eval",
-        "q_numeric_facts",
-        "q_date_facts",
-        # wave-19
-        "q_polarity",
-        "q_voice",
-        "q_robots",
-        # wave-20
-        "q_ntriples",
-        "q_shacl",
-        "q_ner_eval",
-        # wave-21
-        "q_kg_pattern",
-        "q_host_skyline",
-        "q_tpch_minsupp",
-        # wave-22
-        "q_watermark_audit",
-        "q_json_props",
-        # wave-23
-        "q_extract_mixed",
-        "q_hilbert_stats",
-        # wave-24
-        "q_hll_overlap",
-        # wave-26
-        "q_rectangles",
-        "q_sage_features",
-        "q_tpch_smallqty",
-        # wave-27
-        "q_kn_bigram",
-        "q_soundex_blocks",
-        # wave-28
-        "q_node2vec_walks",
-        "q_embed_rrf",
-        # wave-29
-        "q_ktruss",
-        "q_greedy_cover",
-        # wave-30
-        "q_tpch_waiting",
-        "q_tpch_idle",
-        # wave-31
-        "q_bootstrap_ci",
-        # wave-32 (q_boruvka_msf is the heaviest iterative op in the
-        # contract — timed per VERDICT r3 #7; pointer-jump contraction
-        # + one mid-loop pin took it 37s -> ~19s warm at sf0.1)
-        "q_sn_blocks",
-        "q_boruvka_msf",
-        # wave-33
-        "q_grouping_sets",
-        "q_range_frame",
-    ]
-    qs = E.queries()
     suite: list[tuple[str, object]] = [
         ("e2e_triples", lambda: e2e_triples(spark, pages_path)),
         ("web_graph_corpus",
          lambda: web_graph(spark.read.parquet(pages_path))),
     ] + [
-        (name, (lambda n=name: qs[n](spark, sf_dir)))
-        for name in bench_queries
-        if name in qs
+        (name, (lambda fn=fn: fn(spark, sf_dir)))
+        for name, fn in E.bench_queries().items()
     ]
     if only:
         suite = [(n, m) for n, m in suite if n in only or n == "e2e_triples"]

@@ -263,17 +263,18 @@ def connected_components(
     )
 
 
-def _linked_members(
+def linked_members(
     mentions: DataFrame,
-    types: list[str] | None,
-    n_bands: int,
-    tau_string: float,
+    types: list[str] | None = None,
+    n_bands: int = N_BANDS,
+    tau_string: float = TAU_STRING,
 ) -> DataFrame:
     """Full linking dataflow -> per-surface rows with component label and
     canonical: (entity_type, norm, n_mentions, label, canonical).
     canonical = the component's most-mentioned surface (ties: lexicographic
     min) — deterministic, unlike the reference's set-order mode tie-break
-    (named_entity_recognizer.py:485)."""
+    (named_entity_recognizer.py:485). The checkpointable state an
+    incremental run resumes from (see incremental_members)."""
     from pyspark.sql import Window as W
 
     nodes = surface_nodes(mentions, types).localCheckpoint(eager=True)
@@ -308,19 +309,8 @@ def link_entities(
 ) -> DataFrame:
     """mentions -> entities(entity_type, canonical, n_surfaces, n_mentions)."""
     return _entities_from_members(
-        _linked_members(mentions, types, n_bands, tau_string)
+        linked_members(mentions, types, n_bands, tau_string)
     )
-
-
-def linked_members(
-    mentions: DataFrame,
-    types: list[str] | None = None,
-    n_bands: int = N_BANDS,
-    tau_string: float = TAU_STRING,
-) -> DataFrame:
-    """Public full-linking members table — the checkpointable state an
-    incremental run resumes from (see incremental_members)."""
-    return _linked_members(mentions, types, n_bands, tau_string)
 
 
 def _with_node_features(rows: DataFrame) -> DataFrame:
@@ -626,7 +616,7 @@ def entity_members(
 ) -> DataFrame:
     """(entity_type, norm, canonical) — the surface->canonical map used by
     resolve_mentions."""
-    return _linked_members(mentions, types, n_bands, tau_string).select(
+    return linked_members(mentions, types, n_bands, tau_string).select(
         "entity_type", "norm", "canonical"
     )
 
@@ -904,7 +894,7 @@ def el_candidates(
     ranked row per reading, and the consumer thresholds or re-ranks
     with context.
 
-    Scale shape: rides _linked_members (one groupBy(type, norm) +
+    Scale shape: rides linked_members (one groupBy(type, norm) +
     the certified LSH->CC linking) — already ONE row per distinct
     (type, norm) with corpus mention counts aggregated; the
     cross-type total is a map-side-combined agg on norm
@@ -919,7 +909,7 @@ def el_candidates(
     # would execute twice (CLAUDE.md: self-joins over live stages;
     # measured 7.5s -> ~2s at sf0.01)
     m = (
-        _linked_members(mentions, types, N_BANDS, TAU_STRING)
+        linked_members(mentions, types)
         .select("entity_type", "norm", "n_mentions", "canonical")
         .localCheckpoint(eager=True)
     )
@@ -1174,7 +1164,7 @@ def el_disambig(
     on a crafted corpus in tests/test_wave15.py.
 
     Scale shape: the candidate table is vocabulary-bounded (rides
-    _linked_members) and joins into the instance stream on norm; the
+    linked_members) and joins into the instance stream on norm; the
     context table is ONE distinct over (doc, src_norm, cluster) plus a
     tiny per-doc distinct-cluster count agg whose > max_ctx docs are
     dropped entirely (the boilerplate-page guard entity_cooccur uses);

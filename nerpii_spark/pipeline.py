@@ -109,8 +109,11 @@ class Pipeline:
 
     # -- checkpoint plumbing -------------------------------------------------
 
-    def _write(self, stage: str, df: DataFrame) -> tuple[list[int], int]:
-        """Checkpoint df as stage -> (rows per bucket, observed; wall ms)."""
+    def _write(
+        self, stage: str, df: DataFrame
+    ) -> tuple[list[int], int, StructType | None]:
+        """Checkpoint df as stage -> (rows per bucket, observed; wall ms;
+        the schema the checkpoint reads back with, None to infer it)."""
         t0 = time.perf_counter()
         n, partition_by = self.cfg.n_buckets, ()
         if "url" in df.columns:
@@ -125,13 +128,16 @@ class Pipeline:
         observed = df.observe(seen, *bucket_counts(df, n))
         self.catalog.write(observed, stage, partition_by)
         counts = list(seen.get.values())
+        # columns in the order a partitioned read gives: partition ones last
+        cols = [c for c in df.columns if c not in partition_by]
+        written = df.select(*cols, *partition_by)
+        schema = written.schema
         if partition_by and not sum(counts):
             # a partitioned write of no rows writes no data file, so there
-            # is no schema to read back: rewrite it as one empty file,
-            # columns in the order a partitioned read gives
-            cols = [c for c in df.columns if c not in partition_by]
-            self.catalog.write(df.select(*cols, *partition_by).limit(0), stage)
-        return counts, int((time.perf_counter() - t0) * 1000)
+            # is no schema to read back: rewrite it as one empty file
+            self.catalog.write(written.limit(0), stage)
+            schema = None
+        return counts, int((time.perf_counter() - t0) * 1000), schema
 
     def _append_lineage(self, stage, counts, input_rows, wall_ms) -> None:
         """One row per bucket from literals, with no Python worker to start."""
@@ -179,13 +185,13 @@ class Pipeline:
                     # skipped on resume: its checkpoint is counted once
                     rows[upstream] = out[upstream].count()
                 src = out[upstream] if upstream else pages
-                counts, ms = self._write(stage, operator(src))
+                counts, ms, schema = self._write(stage, operator(src))
                 rows[stage] = sum(counts)  # S1 is 1:1: its own input_rows
                 self._append_lineage(
                     stage, counts, rows[upstream or stage], ms
                 )
                 self.cfg.executed.append(stage)
-                out[stage] = self.catalog.read(self.spark, stage)
+                out[stage] = self.catalog.read(self.spark, stage, schema)
             if stage == stop_after:
                 break
         return out

@@ -14,6 +14,7 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -33,9 +34,14 @@ class TableCatalog:
             return os.path.exists(os.path.join(self.path(name), "_SUCCESS"))
         return spark.catalog.tableExists(self._ident(name))
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, name: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """A Parquet read infers the schema with a Spark job unless the
+        caller knows it (e.g. the frame it has just written)."""
         if self.format == "parquet":
-            return spark.read.parquet(self.path(name))
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            return reader.parquet(self.path(name))
         return spark.table(self._ident(name))
 
     def write(

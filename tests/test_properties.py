@@ -3,6 +3,7 @@ strategy (it has no property tests): the cross-engine determinism claims
 hold for arbitrary inputs, not just the planted corpus."""
 
 import duckdb
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -230,87 +231,52 @@ def test_segments_match_legacy_split_and_index(text):
 
 def test_survey_and_driver_contract_in_sync():
     """SURVEY.md §2 is the judge's coverage checklist: every registered
-    driver query must appear there and vice versa, and EVERY query needs
-    an oracle_sql twin — since r3 even the approximate ANN queries carry
-    bit-exact replay oracles (recall vs brute force stays pytest-gated,
-    but determinism is driver-certified)."""
+    driver query must appear there and vice versa."""
+    import os
     import re
 
     import __spark_entry__ as E
 
-    survey = open("/root/repo/SURVEY.md").read()
-    listed = set(re.findall(r"`(q_[a-z0-9_]+)`", survey))
+    path = os.path.join(os.path.dirname(__file__), os.pardir, "SURVEY.md")
+    with open(path) as f:
+        listed = set(re.findall(r"`(q_[a-z0-9_]+)`", f.read()))
     keys = set(E.queries())
     assert keys - listed == set(), f"queries missing from SURVEY: {keys - listed}"
     assert listed - keys == set(), f"SURVEY lists unknown queries: {listed - keys}"
-    no_oracle = keys - set(E.oracle_sql())
-    assert no_oracle == set(), no_oracle
 
 
-def test_certification_rotation_head_is_uncertified():
-    """Driver-certification rotation guard (VERDICT r4 #5): the driver
-    samples roughly the first 50 entries of queries() each round, so
-    the head must be spent on queries WITHOUT a green driver
-    CORRECTNESS row.  The check runs against the committed
-    CERTIFIED_UNION fixture — a deliberate snapshot of the rounds the
-    current ordering was sorted against (regenerated at round start
-    with ``python tools/certified_union.py``, which folds in any new
-    CORRECTNESS_r*.json and then forces a head re-sort here) — rather
-    than live driver artifacts, so the gate stays green when the
-    CURRENT round's sample certifies the head mid-round (by design:
-    that is the head doing its job, not ordering debt).  Queries whose
-    LATEST driver row is a failure are not in the union and
-    deliberately lead the head for re-certification."""
-    import json
-    import os
+def test_query_registry_is_the_contract():
+    """Every module-level q_* builder is registered with an oracle, the
+    driver views agree, and a name cannot be registered twice."""
+    import inspect
 
     import __spark_entry__ as E
 
-    fixture = os.path.join(
-        os.path.dirname(__file__), "fixtures", "CERTIFIED_UNION.json"
-    )
-    if not os.path.exists(fixture):  # fresh checkout without artifacts
-        return
-    with open(fixture) as f:
-        snap = json.load(f)
-    union = set(snap["certified"])
-    head = list(E.queries())[:50]
-    stale = [name for name in head if name in union]
-    assert stale == [], (
-        f"queries() head contains {len(stale)} entries already certified "
-        f"as of {snap['rounds']} — regenerate the fixture "
-        f"(tools/certified_union.py) and re-sort queries(): {stale}"
-    )
-
-
-def test_certified_union_reads_rounds_in_numeric_order(tmp_path, monkeypatch):
-    """Later rounds overwrite earlier rows by ROUND NUMBER: r100 is read
-    after r10, which a lexicographic sort would invert."""
-    import importlib.util
-    import json
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "certified_union",
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools",
-                     "certified_union.py"),
-    )
-    cu = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cu)
-    green = {"rows_match": True, "schema_match": True, "hash_match": True}
-    rows = {
-        9: {"q_a": green, "q_b": green},
-        10: {"q_a": {**green, "err": "boom"}, "q_b": green},
-        100: {"q_a": green, "q_b": {**green, "rows_match": False}},
+    defined = {
+        name for name, fn in vars(E).items()
+        if name.startswith("q_") and inspect.isfunction(fn)
     }
-    for n, r in rows.items():
-        (tmp_path / f"CORRECTNESS_r{n}.json").write_text(json.dumps(r))
-    monkeypatch.setattr(cu, "REPO", str(tmp_path))
-    union, rounds = cu.certified_union()
-    assert rounds == [
-        "CORRECTNESS_r9.json", "CORRECTNESS_r10.json", "CORRECTNESS_r100.json"
-    ]
-    assert union == ["q_a"]
+    qs, oracles = E.queries(), E.oracle_sql()
+    assert defined == set(qs)
+    assert set(qs) == set(oracles)
+    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
+    assert set(E.bench_queries()) <= set(qs)
+    with pytest.raises(ValueError, match="registered twice"):
+        E.query("select 1")(E.q_scan)
+    with pytest.raises(ValueError, match="needs an oracle"):
+        E.query("")
+    assert E.queries() == qs
+
+
+def test_bench_only_rejects_unknown_names(monkeypatch, capsys):
+    """A name in SPARK_GRAFT_BENCH_ONLY that is not in the bench suite
+    (a typo, or a query registered without bench=True) fails before
+    Spark starts, naming every unknown entry."""
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "q_triples_by_pred,q_tyop,q_scan")
+    assert bench.main() == 2
+    assert "['q_scan', 'q_tyop']" in capsys.readouterr().err
 
 
 def _py_spread16(x: int) -> int:
