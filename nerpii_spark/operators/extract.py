@@ -363,68 +363,119 @@ PR_SCALE = 10**12  # fixed-point rank unit (rank_e12)
 PR_DAMP = 850      # damping factor in permille (0.85)
 
 
-def pagerank(triples: DataFrame, n_iter: int = 3) -> DataFrame:
-    """Fixed-point PageRank over the directed entity graph ->
-    (node, rank_e12). Ranks are bigint fixed-point (PR_SCALE = 1e12), and
-    EVERY operation — initial mass, per-edge contribution, dangling
-    redistribution, damping — is integer arithmetic with a fixed
-    evaluation order, so Spark and the DuckDB chained-CTE oracle agree
-    bit-for-bit (no float summation order, no libm).
+def _rank_edges(edges: DataFrame) -> DataFrame:
+    """Pinned rank edges from distinct (src, dst, ...) rows: self-loops
+    dropped and the source's out-degree `odeg` joined once, so no round
+    re-aggregates it."""
+    edges = edges.where(F.col("src") != F.col("dst"))
+    odeg = edges.groupBy("src").agg(F.count("*").alias("odeg"))
+    return edges.join(odeg, "src").localCheckpoint(eager=True)
 
-    update: r'(v) = (150*base + 850*(contrib(v) + dangling div N)) div 1000
-    where base = PR_SCALE div N, contrib(v) = sum over in-edges (u,v) of
-    r(u) div outdeg(u), dangling = total rank on sink nodes.
 
-    Scale shape: each iteration is one edges|>ranks equi-join + one
-    groupBy(dst) partial-aggregated shuffle, plus a one-row dangling agg
-    broadcast back via crossJoin — NO driver-side collect in the loop.
-    Edges and nodes are localCheckpoint'd once; each iteration's ranks
-    are checkpointed to truncate the iterative lineage (same discipline
-    as the CC fixpoint). n_iter is fixed here (the driver query is a
-    deterministic 3-step demo); a production run iterates until the
-    total rank delta underflows the fixed-point unit."""
-    edges = (
-        triples.where(F.col("subj") != F.col("obj"))
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+def _rank_rounds(
+    edges: DataFrame,
+    ranks: DataFrame | None,
+    n_iter: int,
+    share: str,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
+    """The damped fixed-point round of the PageRank family over
+    `_rank_edges` output -> (node, rank), rank bigint in PR_SCALE units.
+    Every step is integer arithmetic with a fixed evaluation order, so
+    Spark and the chained-CTE DuckDB oracles agree bit for bit (no float
+    summation order, no libm):
+
+      r'(v) = (150*tele(v) + 850*(contrib(v)
+               + [v gets dangling] * (dang div m))) div 1000
+
+    contrib(v) sums the SQL expression `share` (over `rank`, `odeg` and
+    the edge's own columns) along the in-edges (u, v); dang is the rank
+    held by nodes with no out-edge. Without `seeds`, m is the node
+    count, tele(v) = PR_SCALE div m and every node gets the dangling
+    share. With `seeds` (a `node` frame), m is the seed count and only
+    the seeds get tele(v) and the dangling share; the rest get 0. Rounds
+    start from `ranks` (node, rank) where given, else from tele(v). An
+    empty graph (m = 0) gives an empty result.
+
+    Per-round plan: one edges|>ranks equi-join and one map-side-combined
+    groupBy(dst) shuffle, a one-row dangling aggregate broadcast back by
+    crossJoin (no driver-side collect in the loop), then one
+    localCheckpoint to truncate the iterative lineage. The node set is
+    pinned once, and its dangling and seed flags ride on the rank rows.
+    n_iter is a fixed budget: the driver queries are deterministic
+    few-round demos and the oracles replay the same budget."""
     nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        edges.select(F.col("src").alias("node"), F.lit(True).alias("out"))
+        .union(edges.select("dst", F.lit(False)))
+        .groupBy("node")
+        .agg(F.max("out").alias("out"))
     )
-    n = nodes.count()
-    base = PR_SCALE // n
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("odeg"))
-    ranks = nodes.select(
-        "node", F.lit(base).cast("bigint").alias("rank")
+    if seeds is None:
+        nodes = nodes.withColumn("seed", F.lit(True))
+    else:
+        nodes = nodes.join(
+            F.broadcast(seeds.select("node", F.lit(True).alias("seed"))),
+            "node",
+            "left",
+        ).withColumn("seed", F.coalesce("seed", F.lit(False)))
+    nodes = nodes.localCheckpoint(eager=True)
+    m = (nodes if seeds is None else seeds).count()
+    if m == 0:
+        return nodes.select("node", F.lit(0).cast("bigint").alias("rank"))
+    tele = (
+        f"case when seed then cast({PR_SCALE // m} as bigint)"
+        " else cast(0 as bigint) end"
+    )
+    start = F.expr(tele)
+    if ranks is not None:
+        nodes = nodes.join(ranks, "node", "left")
+        start = F.coalesce("rank", start)
+    state = nodes.select(
+        "node", "out", "seed", start.alias("rank")
     ).localCheckpoint(eager=True)
     for _ in range(n_iter):
         contrib = (
-            edges.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
+            edges.join(state.select(F.col("node").alias("src"), "rank"), "src")
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.expr("rank div odeg")).cast("bigint").alias("c"))
+            .agg(F.sum(F.expr(share)).cast("bigint").alias("c"))
         )
-        dang = (
-            ranks.join(outdeg, ranks.node == outdeg.src, "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0)).cast("bigint").alias("dang"))
+        dang = state.where(~F.col("out")).agg(
+            F.coalesce(F.sum("rank"), F.lit(0)).cast("bigint").alias("dang")
         )
-        ranks = (
-            nodes.join(contrib, "node", "left")
+        state = (
+            state.drop("rank")
+            .join(contrib, "node", "left")
             .crossJoin(F.broadcast(dang))
             .select(
                 "node",
+                "out",
+                "seed",
                 F.expr(
-                    f"cast((150 * cast({base} as bigint)"
+                    f"cast((150 * {tele}"
                     f" + {PR_DAMP} * (coalesce(c, cast(0 as bigint))"
-                    f" + dang div cast({n} as bigint))) div 1000 as bigint)"
+                    f" + case when seed then dang div cast({m} as bigint)"
+                    " else cast(0 as bigint) end)) div 1000 as bigint)"
                 ).alias("rank"),
             )
             .localCheckpoint(eager=True)
         )
+    return state.select("node", "rank")
+
+
+def pagerank(triples: DataFrame, n_iter: int = 3) -> DataFrame:
+    """Fixed-point PageRank over the directed entity graph ->
+    (node, rank_e12): `_rank_rounds` over the distinct non-loop
+    (subj, obj) edges with contrib(v) = sum over in-edges (u, v) of
+    r(u) div outdeg(u), uniform teleport and dangling redistribution,
+    m = node count. n_iter is fixed here (the driver query is a
+    deterministic 3-step demo); a production run iterates until the
+    total rank delta underflows the fixed-point unit."""
+    edges = _rank_edges(
+        triples.select(
+            F.col("subj").alias("src"), F.col("obj").alias("dst")
+        ).distinct()
+    )
+    ranks = _rank_rounds(edges, None, n_iter, "rank div odeg")
     return ranks.select("node", F.col("rank").alias("rank_e12"))
 
 
@@ -491,65 +542,23 @@ def pagerank_incremental(
     150/1000 of uniform mass every round, so any initial mass error
     decays geometrically), so the DuckDB twin replays it bit-for-bit.
 
-    Scale shape: identical to `pagerank` per round (edges|>ranks
-    equi-join + map-side-combined groupBy(dst) + one-row dangling
-    broadcast, per-round localCheckpoint); the saving is ROUNDS, and the
-    base phase here stands in for ranks a production run reads back
-    from its checkpoint instead of recomputing."""
+    Per round this is `_rank_rounds`, the plan `pagerank` runs; the
+    saving is ROUNDS, and the base phase here stands in for ranks a
+    production run reads back from its checkpoint instead of
+    recomputing."""
     base_ranks = pagerank(base_triples, n_iter=n_base_iter)
-    edges = (
+    edges = _rank_edges(
         base_triples.select("subj", "obj")
         .unionByName(delta_triples.select("subj", "obj"))
-        .where(F.col("subj") != F.col("obj"))
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    ranks = _rank_rounds(
+        edges,
+        base_ranks.withColumnRenamed("rank_e12", "rank"),
+        n_delta_iter,
+        "rank div odeg",
     )
-    n = nodes.count()
-    base = PR_SCALE // n
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("odeg"))
-    ranks = (
-        nodes.join(
-            base_ranks.withColumnRenamed("rank_e12", "rank"), "node", "left"
-        )
-        .select(
-            "node",
-            F.coalesce(F.col("rank"), F.lit(base).cast("bigint")).alias(
-                "rank"
-            ),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(n_delta_iter):
-        contrib = (
-            edges.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.expr("rank div odeg")).cast("bigint").alias("c"))
-        )
-        dang = (
-            ranks.join(outdeg, ranks.node == outdeg.src, "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0)).cast("bigint").alias("dang"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                F.expr(
-                    f"cast((150 * cast({base} as bigint)"
-                    f" + {PR_DAMP} * (coalesce(c, cast(0 as bigint))"
-                    f" + dang div cast({n} as bigint))) div 1000 as bigint)"
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
     return ranks.select("node", F.col("rank").alias("rank_e12"))
 
 
@@ -1423,13 +1432,10 @@ def pagerank_weighted(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     on template-linked hosts. Share quantization (1e-6 relative) is
     part of the operator's defined semantics; the oracle replays it.
 
-    update: r'(v) = (150*base + 850*(contrib(v) + dang div N)) div 1000,
-    dangling = rank on nodes with no out-edges, redistributed uniformly
-    (the unweighted convention — weights shape flow, not teleport).
+    Teleport and dangling mass stay uniform (the unweighted convention
+    — weights shape flow, not teleport).
 
-    Scale shape: identical to pagerank — per iteration ONE edges|>ranks
-    equi-join + one map-side-combined groupBy(dst), a one-row dangling
-    agg broadcast back, per-iteration localCheckpoint; the share
+    Per round this is `_rank_rounds`, the plan pagerank runs; the share
     normalization is one extra groupBy(src) + join BEFORE the loop,
     amortized across iterations."""
     e = (
@@ -1438,64 +1444,18 @@ def pagerank_weighted(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         .agg(F.sum("w").cast("bigint").alias("w"))
     )
     outw = e.groupBy("src").agg(F.sum("w").cast("bigint").alias("tw"))
-    e = (
-        e.join(outw, "src")
-        .select(
+    e = _rank_edges(
+        e.join(outw, "src").select(
             "src",
             "dst",
             F.expr(
                 "cast((w * cast(1000000 as bigint)) div tw as bigint)"
             ).alias("wshare_e6"),
         )
-        .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    ranks = _rank_rounds(
+        e, None, n_iter, "(rank * wshare_e6) div cast(1000000 as bigint)"
     )
-    n = nodes.count()
-    base = PR_SCALE // n
-    ranks = nodes.select(
-        "node", F.lit(base).cast("bigint").alias("rank")
-    ).localCheckpoint(eager=True)
-    srcs = e.select("src").distinct().localCheckpoint(eager=True)
-    for _ in range(n_iter):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.sum(
-                    F.expr(
-                        "(rank * wshare_e6) div cast(1000000 as bigint)"
-                    )
-                )
-                .cast("bigint")
-                .alias("c")
-            )
-        )
-        dang = (
-            ranks.join(srcs, ranks.node == srcs.src, "left_anti")
-            .agg(
-                F.coalesce(F.sum("rank"), F.lit(0))
-                .cast("bigint")
-                .alias("dang")
-            )
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                F.expr(
-                    f"cast((150 * cast({base} as bigint)"
-                    f" + {PR_DAMP} * (coalesce(c, cast(0 as bigint))"
-                    f" + dang div cast({n} as bigint))) div 1000 as bigint)"
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
     return ranks.select("node", F.col("rank").alias("rank_e12"))
 
 

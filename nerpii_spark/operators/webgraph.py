@@ -619,9 +619,8 @@ def trustrank(
     tie-break by name) — the stand-in for a human-vetted whitelist; the
     operator takes any seed rule that yields a DataFrame.
 
-    All arithmetic is bigint fixed-point with a fixed evaluation order
-    (the extract.pagerank discipline), so the chained-CTE DuckDB oracle
-    replays the distributed iteration bit-for-bit:
+    The round is extract's `_rank_rounds` with the seeds passed in, so
+    the chained-CTE DuckDB oracle replays it bit-for-bit:
 
       r'(v) = (150*seed_base(v) + 850*(contrib(v)
                + [v in seeds] * (dang div n_actual))) div 1000
@@ -629,76 +628,22 @@ def trustrank(
     where seed_base(v) = PR_SCALE div n_actual on seeds else 0, and
     dangling mass teleports BACK TO THE SEEDS (uniform redistribution
     would leak trust to spam sinks — the differentiator vs pagerank).
+    The seed flag is an n_seeds-row broadcast join before the loop."""
+    from nerpii_spark.operators.extract import _rank_edges, _rank_rounds
 
-    Scale shape: identical to pagerank — per iteration one edges|>ranks
-    equi-join + one map-side-combined groupBy(dst), a ONE-ROW dangling
-    agg broadcast back, per-iteration localCheckpoint; the seed flag is
-    an n_seeds-row broadcast join."""
-    from nerpii_spark.operators.extract import PR_DAMP, PR_SCALE
-
-    e = (
-        edges.where(F.col("subj") != F.col("obj"))
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    indeg = e.groupBy(F.col("dst").alias("node")).agg(
-        F.count("*").alias("indeg")
+    e = _rank_edges(
+        edges.select(
+            F.col("subj").alias("src"), F.col("obj").alias("dst")
+        ).distinct()
     )
     seeds = (
-        indeg.orderBy(F.desc("indeg"), F.asc("node"))
+        e.groupBy(F.col("dst").alias("node"))
+        .agg(F.count("*").alias("indeg"))
+        .orderBy(F.desc("indeg"), F.asc("node"))
         .limit(n_seeds)
-        .select("node", F.lit(True).alias("is_seed"))
         .localCheckpoint(eager=True)
     )
-    n_actual = seeds.count()
-    base = PR_SCALE // n_actual
-    outdeg = e.groupBy("src").agg(F.count("*").alias("odeg"))
-    ranks = (
-        nodes.join(F.broadcast(seeds), "node", "left")
-        .select(
-            "node",
-            F.when(F.col("is_seed"), F.lit(base).cast("bigint"))
-            .otherwise(F.lit(0).cast("bigint"))
-            .alias("rank"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(n_iter):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.expr("rank div odeg")).cast("bigint").alias("c"))
-        )
-        dang = ranks.join(
-            outdeg, ranks.node == outdeg.src, "left_anti"
-        ).agg(
-            F.coalesce(F.sum("rank"), F.lit(0)).cast("bigint").alias("dang")
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .join(F.broadcast(seeds), "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                F.expr(
-                    f"cast((150 * (case when is_seed then"
-                    f" cast({base} as bigint) else cast(0 as bigint) end)"
-                    f" + {PR_DAMP} * (coalesce(c, cast(0 as bigint))"
-                    f" + (case when is_seed then dang div"
-                    f" cast({n_actual} as bigint) else cast(0 as bigint)"
-                    f" end))) div 1000 as bigint)"
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    ranks = _rank_rounds(e, None, n_iter, "rank div odeg", seeds=seeds)
     return ranks.select("node", F.col("rank").alias("trust_e12"))
 
 
@@ -1620,12 +1565,17 @@ def spam_mass(
 def duck_spam_mass_sql(pages_sql_duck: str, n_iter: int = 3) -> str:
     """Oracle: the pagerank and trustrank chained-CTE replays composed
     over the planted link set, then the same integer ratio."""
+    return _duck_spam_mass_of_edges_sql(
+        f"select src_host as subj, dst_host as obj from"
+        f" ({duck_planted_links_sql(pages_sql_duck)})",
+        n_iter,
+    )
+
+
+def _duck_spam_mass_of_edges_sql(edges: str, n_iter: int) -> str:
+    """duck_spam_mass_sql over any (subj, obj) edge relation."""
     from nerpii_spark.operators.extract import duck_pagerank_sql
 
-    edges = (
-        f"select src_host as subj, dst_host as obj from"
-        f" ({duck_planted_links_sql(pages_sql_duck)})"
-    )
     return f"""
 with pr as materialized (
   select * from ({duck_pagerank_sql(edges, n_iter=n_iter)})

@@ -148,38 +148,6 @@ def test_triple_typecheck_counts(spark):
     }
 
 
-def test_pagerank_weighted_flow_and_uniform_equivalence(spark):
-    from nerpii_spark.operators.extract import pagerank, pagerank_weighted
-
-    # s endorses a 9x harder than b: a must outrank b
-    edges = spark.createDataFrame(
-        [("s", "a", 9), ("s", "b", 1), ("a", "s", 1), ("b", "s", 1)],
-        "src string, dst string, w long",
-    )
-    r = {
-        x["node"]: x["rank_e12"]
-        for x in pagerank_weighted(edges, n_iter=3).collect()
-    }
-    assert r["a"] > r["b"]
-    # uniform weights with outdeg | 1e6: shares are exact, so the
-    # weighted form must equal plain pagerank bit-for-bit
-    uni = spark.createDataFrame(
-        [("s", "a", 7), ("s", "b", 7), ("a", "b", 3), ("b", "a", 3)],
-        "src string, dst string, w long",
-    )
-    got = {
-        x["node"]: x["rank_e12"]
-        for x in pagerank_weighted(uni, n_iter=2).collect()
-    }
-    ref = {
-        x["node"]: x["rank_e12"]
-        for x in pagerank(
-            uni.selectExpr("src as subj", "dst as obj"), n_iter=2
-        ).collect()
-    }
-    assert got == ref
-
-
 def test_cluster_size_stats_golden(spark):
     from nerpii_spark.operators.dedup import cluster_size_stats
 

@@ -338,59 +338,6 @@ def test_expectations_green_on_planted_corpus(spark):
 
 
 # ---------------------------------------------------------------------------
-# incremental pagerank
-# ---------------------------------------------------------------------------
-
-
-def test_pagerank_incremental_warm_start_beats_cold(spark):
-    from nerpii_spark.operators.extract import (
-        pagerank,
-        pagerank_incremental,
-    )
-
-    # base: 12-cycle + chords; delta: 3 edges, one NEW node n12
-    base_edges = [(f"n{i}", f"n{(i + 1) % 12}") for i in range(12)] + [
-        ("n0", "n6"), ("n3", "n9"),
-    ]
-    delta_edges = [("n1", "n7"), ("n12", "n2"), ("n5", "n12")]
-    to_df = lambda rows: spark.createDataFrame(
-        rows, "subj string, obj string"
-    )
-    merged = to_df(base_edges + delta_edges)
-    ref = {r["node"]: r["rank_e12"]
-           for r in pagerank(merged, n_iter=12).collect()}
-    warm = {r["node"]: r["rank_e12"]
-            for r in pagerank_incremental(
-                to_df(base_edges), to_df(delta_edges),
-                n_base_iter=3, n_delta_iter=2,
-            ).collect()}
-    cold = {r["node"]: r["rank_e12"]
-            for r in pagerank(merged, n_iter=2).collect()}
-    assert set(warm) == set(ref) == set(cold)
-    l1 = lambda d: sum(abs(d[k] - ref[k]) for k in ref)
-    # the warm-start claim: resuming from the (near-converged) base
-    # ranks gets closer to the merged fixed point in the same 2 rounds
-    assert l1(warm) < l1(cold), (l1(warm), l1(cold))
-
-
-def test_pagerank_incremental_two_runs_identical(spark):
-    from nerpii_spark.operators.extract import pagerank_incremental
-
-    base = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a")], "subj string, obj string"
-    )
-    delta = spark.createDataFrame(
-        [("c", "d"), ("d", "a")], "subj string, obj string"
-    )
-    r1 = sorted(map(tuple, pagerank_incremental(base, delta).collect()))
-    r2 = sorted(map(tuple, pagerank_incremental(base, delta).collect()))
-    assert r1 == r2
-    # every rank positive, new node d present
-    assert all(v > 0 for _, v in r1)
-    assert {n for n, _ in r1} == {"a", "b", "c", "d"}
-
-
-# ---------------------------------------------------------------------------
 # bloom semi-join runtime filter
 # ---------------------------------------------------------------------------
 
