@@ -1420,7 +1420,10 @@ def pagerank_weighted(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     multiplicity n_links — a host linking a partner 10^4 times endorses
     it more than a one-off citation; plain pagerank() deliberately
     collapses multi-edges). Input: (src, dst, w) rows; multi-edges are
-    re-summed and self-loops dropped defensively.
+    re-summed and self-loops dropped defensively, and a (src, dst) pair
+    whose summed weight is not positive carries no flow and is dropped
+    before normalizing, so W(src) > 0. A source left with no edge is
+    dangling; a node left on no edge is not ranked.
 
     Integer discipline (the pagerank/trustrank family rules): weights
     first normalize per source into millionths — wshare_e6 = (w * 1e6)
@@ -1442,6 +1445,7 @@ def pagerank_weighted(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         edges.where(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.sum("w").cast("bigint").alias("w"))
+        .where(F.col("w") > 0)
     )
     outw = e.groupBy("src").agg(F.sum("w").cast("bigint").alias("tw"))
     e = _rank_edges(
@@ -1467,7 +1471,7 @@ def duck_pagerank_weighted_sql(edges_sql: str, n_iter: int = 3) -> str:
     head = f"""
 with
 raw as materialized (select src, dst, cast(sum(w) as bigint) as w
-      from ({edges_sql}) where src <> dst group by 1, 2),
+      from ({edges_sql}) where src <> dst group by 1, 2 having sum(w) > 0),
 ow as materialized (select src, cast(sum(w) as bigint) as tw
       from raw group by 1),
 e as materialized (

@@ -3,7 +3,9 @@
 Local mode stands in for a multi-executor cluster; every config here is
 what we would ship in spark-defaults on a 1000-executor cluster reading
 100 TB (AQE on, skew-join on, Arrow transport for the pandas-UDF stages,
-shuffle partitions sized to cores rather than the 200 default).
+shuffle partitions sized to cores rather than the 200 default). The
+Python workers are forked from `nerpii_spark.daemon`, which stops them
+re-reading pyspark.zip at every task start.
 """
 
 from __future__ import annotations
@@ -23,6 +25,10 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
+    # the workers import this checkout whatever the caller's cwd, which
+    # still comes first on their sys.path
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -35,6 +41,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("NERPII_SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "nerpii_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

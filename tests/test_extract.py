@@ -230,6 +230,11 @@ SHAPES = {
          ("a", "c", 5), ("b", "s", 3), ("b", "c", 4), ("c", "a", 7)],
         2,
     ),
+    # zero and negative summed weights: pagerank_weighted drops those
+    # pairs, so a is dangling there
+    "non_positive_weights": (
+        [("a", "b", 0), ("b", "a", 1), ("b", "c", -2), ("c", "a", 1)], 2,
+    ),
     "more_seeds_than_nodes": (
         [("a", "b", 1), ("b", "c", 1), ("c", "d", 1), ("d", "b", 1)], 100,
     ),
