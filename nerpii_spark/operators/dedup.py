@@ -924,16 +924,12 @@ def simhash_sql_duck(text_expr: str) -> str:
 
 def near_dedup_survivors(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Full near-dedup: MinHash pairs -> connected components (reusing the
-    linking CC fixpoint) -> one survivor (min id) per duplicate cluster.
-    -> (keep_id, n_members). Singletons keep themselves."""
-    from .link import connected_components
+    linking CC fixpoint via link.pair_labels) -> one survivor (min id)
+    per duplicate cluster. -> (keep_id, n_members). Singletons keep
+    themselves."""
+    from .link import pair_labels
 
-    pairs = minhash_dup_pairs(docs, id_col=id_col)
-    nodes = docs.select(F.col(id_col).alias("sid"))
-    labels = connected_components(
-        nodes, pairs.select(F.col("id_a").alias("sid_a"),
-                            F.col("id_b").alias("sid_b"))
-    )
+    labels = pair_labels(docs, id_col, minhash_dup_pairs(docs, id_col=id_col))
     return labels.groupBy("label").agg(
         F.min("sid").alias("keep_id"), F.count("*").alias("n_members")
     ).select("keep_id", "n_members")
@@ -941,22 +937,12 @@ def near_dedup_survivors(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 def duck_near_dedup_survivors_sql(exact_pairs_sql: str, doc_rel: str = "documents") -> str:
     """DuckDB oracle: connected components over the exact-Jaccard pair
-    ground truth via a recursive min-label propagation CTE."""
+    ground truth via a recursive min-label propagation CTE
+    (link.duck_pair_labels_sql)."""
+    from .link import duck_pair_labels_sql
+
     dup = dup_docs_sql("duck", doc_rel)
-    return f"""
-with recursive
-nodes as (select doc_id from ({dup})),
-e as (select id_a, id_b from ({exact_pairs_sql})),
-sym as (select id_a as src, id_b as dst from e
-        union all select id_b, id_a from e),
-reach(id, lbl) as (
-  select doc_id, doc_id from nodes
-  union
-  select s.dst, r.lbl
-  from reach r join sym s on s.src = r.id
-  where r.lbl < s.dst
-),
-comp as (select id, min(lbl) as lbl from reach group by 1)
+    return duck_pair_labels_sql(dup, "doc_id", exact_pairs_sql) + """
 select lbl as keep_id, count(*) as n_members from comp group by 1
 """
 
@@ -1442,17 +1428,10 @@ def quality_survivors(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     SINGLE map-side-combined agg via max_by(sid, (margin, -sid)) — no
     window over clusters (a giant boilerplate cluster would make a hot
     partition), no join-back, every branch consumed once."""
-    from .link import connected_components
+    from .link import pair_labels
     from .textstats import quality_classifier
 
-    pairs = minhash_dup_pairs(docs, id_col=id_col)
-    nodes = docs.select(F.col(id_col).alias("sid"))
-    labels = connected_components(
-        nodes,
-        pairs.select(
-            F.col("id_a").alias("sid_a"), F.col("id_b").alias("sid_b")
-        ),
-    )
+    labels = pair_labels(docs, id_col, minhash_dup_pairs(docs, id_col=id_col))
     scores = quality_classifier(docs).select(
         F.col("doc_id").alias("sid"), "margin_e6"
     )
@@ -1472,23 +1451,11 @@ def duck_quality_survivors_sql(
     """Oracle: clusters from the exact-Jaccard pair GROUND TRUTH via the
     recursive min-label CTE, quality margins from the classifier twin,
     survivor via an independent row_number formulation."""
+    from .link import duck_pair_labels_sql
     from .textstats import duck_quality_classifier_sql
 
     dup = dup_docs_sql("duck", doc_rel)
-    return f"""
-with recursive
-nodes as (select doc_id from ({dup})),
-e as (select id_a, id_b from ({exact_pairs_sql})),
-sym as (select id_a as src, id_b as dst from e
-        union all select id_b, id_a from e),
-reach(id, lbl) as (
-  select doc_id, doc_id from nodes
-  union
-  select s.dst, r.lbl
-  from reach r join sym s on s.src = r.id
-  where r.lbl < s.dst
-),
-comp as (select id, min(lbl) as lbl from reach group by 1),
+    return duck_pair_labels_sql(dup, "doc_id", exact_pairs_sql) + f""",
 q as (select doc_id, margin_e6
       from ({duck_quality_classifier_sql(f'({dup})')})),
 m as (select c.lbl, c.id, q.margin_e6
@@ -1663,15 +1630,9 @@ def split_leakage(docs: DataFrame, splits: DataFrame,
     the per-cluster rollup is a map-side-combined agg whose collect_set
     is bounded by |splits| (3), and cluster sizes are bounded by the
     LSH cap degrade — no hot reducer."""
-    from .link import connected_components
+    from .link import pair_labels
 
-    pairs = minhash_dup_pairs(docs, id_col=id_col)
-    nodes = docs.select(F.col(id_col).alias("sid"))
-    labels = connected_components(
-        nodes,
-        pairs.select(F.col("id_a").alias("sid_a"),
-                     F.col("id_b").alias("sid_b")),
-    )
+    labels = pair_labels(docs, id_col, minhash_dup_pairs(docs, id_col=id_col))
     j = labels.join(
         splits.select(F.col(id_col).alias("sid"), "split"), "sid"
     )
@@ -1698,21 +1659,10 @@ def duck_split_leakage_sql(exact_pairs_sql: str, split_case_sql: str,
     """Oracle: clusters recomputed from the exact-Jaccard pair ground
     truth (recursive min-label CTE, the near_dedup_survivors oracle),
     split replayed from the same portable hash rule."""
+    from .link import duck_pair_labels_sql
+
     dup = dup_docs_sql("duck", doc_rel)
-    return f"""
-with recursive
-nodes as (select doc_id from ({dup})),
-e as (select id_a, id_b from ({exact_pairs_sql})),
-sym as (select id_a as src, id_b as dst from e
-        union all select id_b, id_a from e),
-reach(id, lbl) as (
-  select doc_id, doc_id from nodes
-  union
-  select s.dst, r.lbl
-  from reach r join sym s on s.src = r.id
-  where r.lbl < s.dst
-),
-comp as (select id, min(lbl) as lbl from reach group by 1),
+    return duck_pair_labels_sql(dup, "doc_id", exact_pairs_sql) + f""",
 sp as (select doc_id, {split_case_sql} as split from ({dup}))
 select lbl as cluster_id,
        cast(count(*) as bigint) as n_docs,

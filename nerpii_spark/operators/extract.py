@@ -301,31 +301,31 @@ def two_hop_locations(triples: DataFrame) -> DataFrame:
     )
 
 
-def kg_triangles(triples: DataFrame) -> DataFrame:
-    """Global triangle census of the entity graph -> one row
-    (n_nodes, n_edges, n_triangles): the standard KG health metric
-    (closure density) over the materialized triple table.
-
-    Scale shape: degree-oriented node-iterator. The undirected distinct
-    edge set is oriented from the lower-(degree, name) endpoint to the
-    higher, making a DAG in which every triangle is counted exactly once
-    at its minimum vertex. The wedge self-join then fans out per node by
-    OUT-degree, which orientation bounds by O(sqrt(m)) on any graph — a
-    celebrity hub that would explode a naive wedge join generates ZERO
-    wedges because all its edges point into it (asserted on a planted
-    star graph in tests). The closing-edge check is an equi-join back to
-    the edge set on the sorted pair. All joins are equi-joins on
-    (src) / (a, b); the edge set is localCheckpoint'd once because three
-    downstream branches (degrees, orientation, closure) reuse it."""
-    e = (
-        triples.where(F.col("subj") != F.col("obj"))
-        .select(
-            F.least("subj", "obj").alias("a"),
-            F.greatest("subj", "obj").alias("b"),
-        )
+def _undirected_edges(df: DataFrame, x: str, y: str) -> DataFrame:
+    """(a, b): the distinct undirected edges over columns x, y, stored
+    once as a sorted pair a < b, self-loops dropped — the edge set of
+    every triangle and rectangle census."""
+    return (
+        df.where(F.col(x) != F.col(y))
+        .select(F.least(x, y).alias("a"), F.greatest(x, y).alias("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
+
+
+def _closed_triangles(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Degree-oriented triangle enumeration over a sorted (a, b) edge
+    set -> (deg (n, d), closed triangles (src, v, w)), each triangle
+    once, at its lowest (degree, name) vertex src with v < w.
+
+    Every edge is oriented from the lower-(degree, name) endpoint to
+    the higher, making a DAG in which every triangle is counted exactly
+    once at its minimum vertex. The wedge self-join then fans out per
+    node by OUT-degree, which orientation bounds by O(sqrt(m)) on any
+    graph — a celebrity hub that would explode a naive wedge join
+    generates ZERO wedges because all its edges point into it. The
+    closing-edge check is an equi-join back to the edge set on the
+    sorted pair; `e` is referenced three times (degrees, orientation,
+    closure), so callers pass it pinned."""
     deg = (
         e.select(F.col("a").alias("n"))
         .unionAll(e.select(F.col("b").alias("n")))
@@ -351,9 +351,26 @@ def kg_triangles(triples: DataFrame) -> DataFrame:
         .join(ori.select("src", F.col("dst").alias("w")), "src")
         .where(F.col("v") < F.col("w"))
     )
-    n_tri = wedges.join(
+    tri = wedges.join(
         e, (F.col("v") == F.col("a")) & (F.col("w") == F.col("b"))
-    ).agg(F.count("*").cast("bigint").alias("n_triangles"))
+    ).select("src", "v", "w")
+    return deg, tri
+
+
+def kg_triangles(triples: DataFrame) -> DataFrame:
+    """Global triangle census of the entity graph -> one row
+    (n_nodes, n_edges, n_triangles): the standard KG health metric
+    (closure density) over the materialized triple table.
+
+    Scale shape: `_undirected_edges` pinned once, then
+    `_closed_triangles`' degree-oriented node-iterator, which counts
+    every triangle once at its minimum vertex and bounds wedge fan-out
+    by O(sqrt(m)) — a celebrity hub generates ZERO wedges (asserted on
+    a planted star graph in tests). All joins are equi-joins on
+    (src) / (a, b)."""
+    e = _undirected_edges(triples, "subj", "obj").localCheckpoint(eager=True)
+    deg, tri = _closed_triangles(e)
+    n_tri = tri.agg(F.count("*").cast("bigint").alias("n_triangles"))
     n_nodes = deg.agg(F.count("*").cast("bigint").alias("n_nodes"))
     n_edges = e.agg(F.count("*").cast("bigint").alias("n_edges"))
     return n_nodes.crossJoin(n_edges).crossJoin(n_tri)

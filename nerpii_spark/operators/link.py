@@ -263,6 +263,40 @@ def connected_components(
     )
 
 
+def pair_labels(rows: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """Duplicate clusters of `rows` -> (sid, label): connected_components
+    over the (id_a, id_b) match pairs between `id_col` ids. Every row
+    gets a label; a row with no pair labels itself."""
+    return connected_components(
+        rows.select(F.col(id_col).alias("sid")),
+        pairs.select(
+            F.col("id_a").alias("sid_a"), F.col("id_b").alias("sid_b")
+        ),
+    )
+
+
+def duck_pair_labels_sql(nodes_sql: str, id_col: str, pairs_sql: str) -> str:
+    """DuckDB twin of pair_labels: a `with recursive` prefix ending in
+    `comp (id, lbl)`, the true components of the (id_a, id_b) pairs of
+    `pairs_sql` over the `id_col` ids of `nodes_sql`, by recursive
+    min-label reachability. Callers append their final select, or more
+    CTEs after a comma."""
+    return f"""
+with recursive
+nodes as (select {id_col} from ({nodes_sql})),
+e as (select id_a, id_b from ({pairs_sql})),
+sym as (select id_a as src, id_b as dst from e
+        union all select id_b, id_a from e),
+reach(id, lbl) as (
+  select {id_col}, {id_col} from nodes
+  union
+  select s.dst, r.lbl
+  from reach r join sym s on s.src = r.id
+  where r.lbl < s.dst
+),
+comp as (select id, min(lbl) as lbl from reach group by 1)"""
+
+
 def linked_members(
     mentions: DataFrame,
     types: list[str] | None = None,

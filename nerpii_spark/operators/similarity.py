@@ -565,21 +565,15 @@ def embedding_dup_survivors(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-level near-dedup, end to end: LSH-verified dup pairs ->
-    connected components (reusing the linking CC fixpoint) -> one
+    connected components (link.pair_labels) -> one
     survivor (min id) per duplicate cluster -> (keep_id, n_members).
     Singletons keep themselves — the same contract as the text-side
     near_dedup_survivors, so a training-data pipeline can dedup by
     embedding similarity with identical downstream semantics."""
-    from .link import connected_components
+    from .link import pair_labels
 
     pairs = embedding_dup_pairs(embs, tau=tau, id_col=id_col, vec_col=vec_col)
-    nodes = embs.select(F.col(id_col).alias("sid"))
-    labels = connected_components(
-        nodes,
-        pairs.select(
-            F.col("id_a").alias("sid_a"), F.col("id_b").alias("sid_b")
-        ),
-    )
+    labels = pair_labels(embs, id_col, pairs)
     return (
         labels.groupBy("label")
         .agg(F.min("sid").alias("keep_id"), F.count("*").alias("n_members"))
@@ -590,23 +584,12 @@ def embedding_dup_survivors(
 def duck_embedding_dup_survivors_sql(tau: float = DUP_TAU) -> str:
     """DuckDB oracle: CC over the exact brute-force pair ground truth via
     a recursive min-label propagation CTE (mirrors the text-side
-    duck_near_dedup_survivors_sql)."""
+    duck_near_dedup_survivors_sql, both link.duck_pair_labels_sql)."""
+    from .link import duck_pair_labels_sql
+
     dup = dup_embs_sql("duck")
     pairs = duck_embedding_dup_pairs_sql(tau)
-    return f"""
-with recursive
-nodes as (select vec_id from ({dup})),
-e as (select id_a, id_b from ({pairs})),
-sym as (select id_a as src, id_b as dst from e
-        union all select id_b, id_a from e),
-reach(id, lbl) as (
-  select vec_id, vec_id from nodes
-  union
-  select s.dst, r.lbl
-  from reach r join sym s on s.src = r.id
-  where r.lbl < s.dst
-),
-comp as (select id, min(lbl) as lbl from reach group by 1)
+    return duck_pair_labels_sql(dup, "vec_id", pairs) + """
 select lbl as keep_id, count(*) as n_members from comp group by 1
 """
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nerpii_spark.functions.hashing import sql_h1
+from nerpii_spark.operators.extract import _closed_triangles, _undirected_edges
 from nerpii_spark.sources.pages import HUB_SALT, N_HUB_HOSTS, N_SITE_HOSTS
 
 _HOST_RE = "https?://([^/]+)"
@@ -516,43 +517,57 @@ def crawl_depth(
     metric behind "how far is this host from the well-connected core" —
     frontier scheduling and spam heuristics both key on it.
 
-    Scale shape: the seed selection is a map-side-combined in-degree
-    count + a TakeOrdered of n_seeds rows (driver holds n_seeds keys,
-    never the degree table); each BFS round is ONE equi-join of the
-    frontier against the symmetric edge list + one min agg that
-    map-side combines, with per-round localCheckpoint (the CC/PageRank
-    discipline). Rounds are FIXED (max_depth), not convergence-tested —
+    Scale shape: the seeds come from `_top_indeg_seeds` (driver holds
+    n_seeds keys, never the degree table); the BFS is `_bounded_reach`
+    over the symmetric edge list, one frontier equi-join + anti-join
+    per round. Rounds are FIXED (max_depth), not convergence-tested —
     depth beyond the horizon is "not reachable in budget", which is the
     semantics a crawl budget actually has; the chained-CTE oracle
     replays the same bounded expansion."""
     e = distinct_host_edges(pages)
     sym = sym_host_edges(pages, e)
+    return _bounded_reach(sym, _top_indeg_seeds(e, n_seeds), max_depth)
+
+
+def _top_indeg_seeds(e: DataFrame, n_seeds: int) -> DataFrame:
+    """(host): the `n_seeds` heads of (u, v) edges with the most
+    in-edges, ties by host name — a map-side-combined in-degree count
+    and a TakeOrdered of n_seeds rows."""
     indeg = e.groupBy(F.col("v").alias("host")).agg(
         F.count("*").alias("indeg")
     )
-    seeds = (
+    return (
         indeg.orderBy(F.desc("indeg"), F.asc("host"))
         .limit(n_seeds)
         .select("host")
     )
-    dist = seeds.select(
+
+
+def _bounded_reach(
+    directed: DataFrame, seed: DataFrame, max_depth: int
+) -> DataFrame:
+    """Hosts reachable from `seed` (host) following `directed`
+    (node -> nbr) edges within max_depth hops -> (host, depth), depth =
+    hops to the nearest seed, seeds at 0. Each round is one frontier
+    equi-join + one anti-join against everything reached so far; the
+    new frontier and the reached set are pinned eagerly per round, so
+    no round re-plans an earlier one."""
+    reach = seed.select(
         "host", F.lit(0).cast("bigint").alias("depth")
     ).localCheckpoint(eager=True)
-    frontier = dist
+    frontier = reach
     for d in range(1, max_depth + 1):
-        reached = (
-            sym.join(frontier, sym.node == frontier.host)
+        new = (
+            directed.join(frontier, directed.node == frontier.host)
             .select(F.col("nbr").alias("host"))
             .distinct()
-        )
-        new = (
-            reached.join(dist, "host", "left_anti")
+            .join(reach, "host", "left_anti")
             .select("host", F.lit(d).cast("bigint").alias("depth"))
             .localCheckpoint(eager=True)
         )
-        dist = dist.unionByName(new).localCheckpoint(eager=True)
+        reach = reach.unionByName(new).localCheckpoint(eager=True)
         frontier = new
-    return dist
+    return reach
 
 
 def duck_crawl_depth_sql(
@@ -1733,7 +1748,7 @@ def modularity(pages: DataFrame, n_rounds: int = LPA_ROUNDS) -> DataFrame:
     ONE conditional-count global agg for e_in, one per-community
     map-side-combined degree rollup, then a one-row crossJoin
     composition — nothing corpus-sized is re-keyed twice."""
-    labels = lpa_communities(pages, n_rounds).localCheckpoint(eager=True)
+    labels = lpa_communities(pages, n_rounds)
     sym = sym_host_edges(pages)
     la = labels.select(
         F.col("host").alias("node"), F.col("community").alias("ca")
@@ -1816,28 +1831,6 @@ from ss, d2
 BOWTIE_MAX_DEPTH = 8
 
 
-def _bounded_reach(
-    directed: DataFrame, seed: DataFrame, max_depth: int
-) -> DataFrame:
-    """Hosts reachable from `seed` following `directed` (node -> nbr)
-    edges within max_depth hops, seed included -> (host). Each round is
-    one frontier equi-join + one anti-join, per-round localCheckpoint
-    (the crawl_depth discipline)."""
-    reach = seed.select("host").localCheckpoint(eager=True)
-    frontier = reach
-    for _ in range(max_depth):
-        new = (
-            directed.join(frontier, directed.node == frontier.host)
-            .select(F.col("nbr").alias("host"))
-            .distinct()
-            .join(reach, "host", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        reach = reach.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    return reach
-
-
 def bowtie(
     pages: DataFrame, max_depth: int = BOWTIE_MAX_DEPTH
 ) -> DataFrame:
@@ -1860,10 +1853,11 @@ def bowtie(
     (tendrils + tubes + disconnected, not separable without more BFS
     passes; labeled honestly).
 
-    Scale shape: two BOUNDED BFS fixpoints (max_depth rounds each; the
-    web's effective diameter is ~6-8, and q_eff_diameter measures this
-    corpus's, so the budget is an argument not a guess), each round ONE
-    frontier equi-join + anti-join + localCheckpoint. Like crawl_depth,
+    Scale shape: two BOUNDED BFS fixpoints (`_bounded_reach`, max_depth
+    rounds each; the web's effective diameter is ~6-8, and
+    q_eff_diameter measures this corpus's, so the budget is an argument
+    not a guess), each round ONE frontier equi-join + anti-join + two
+    pins; the depth column is dropped. Like crawl_depth,
     "beyond the budget" rows land in 'in'/'out'/'other' by where the
     budget cut them — the oracle replays the same bounded expansion, so
     the semantics are total and engine-exact. NOTE the planted corpus
@@ -2394,8 +2388,8 @@ def clustering_coeff(pages: DataFrame) -> DataFrame:
     global census q_kg_triangles reports one number, this attributes
     closure to each host.
 
-    Scale shape: the kg_triangles degree-oriented wedge enumeration
-    reused structurally (orientation bounds wedge fan-out by
+    Scale shape: `extract._closed_triangles` over
+    `extract._undirected_edges` (orientation bounds wedge fan-out by
     O(sqrt(m)); a hub generates zero wedges), with one addition: each
     closed triangle EXPLODES to its three corners (a constant x3) so a
     map-side-combined per-node count attributes it to every member.
@@ -2404,38 +2398,8 @@ def clustering_coeff(pages: DataFrame) -> DataFrame:
     comfortably inside (n_tri <= d^2 locally; a 1e6-degree host would
     need ~2e12*1e6 -> re-quantize — documented, not reachable before
     the wedge cap a real deployment adds)."""
-    links = distinct_host_edges(pages)
-    e = (
-        links.select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").cast("bigint").alias("d"))
-    )
-    ori = (
-        e.join(deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b")
-        .select(
-            F.when(F.col("da") <= F.col("db"), F.col("a"))
-            .otherwise(F.col("b")).alias("src"),
-            F.when(F.col("da") <= F.col("db"), F.col("b"))
-            .otherwise(F.col("a")).alias("dst"),
-        )
-    )
-    wedges = (
-        ori.select("src", F.col("dst").alias("v"))
-        .join(ori.select("src", F.col("dst").alias("w")), "src")
-        .where(F.col("v") < F.col("w"))
-    )
-    tri = wedges.join(
-        e, (F.col("v") == F.col("a")) & (F.col("w") == F.col("b"))
-    ).select("src", "v", "w")
+    e = _undirected_edges(distinct_host_edges(pages), "u", "v")
+    deg, tri = _closed_triangles(e.localCheckpoint(eager=True))
     corners = tri.select(
         F.explode(F.array("src", "v", "w")).alias("n")
     ).groupBy("n").agg(F.count("*").cast("bigint").alias("n_tri"))
@@ -2531,15 +2495,7 @@ def sssp_weighted(
             "w"
         ),
     ).localCheckpoint(eager=True)
-    indeg = e.groupBy(F.col("v").alias("host")).agg(
-        F.count("*").alias("indeg")
-    )
-    seeds = (
-        indeg.orderBy(F.desc("indeg"), F.asc("host"))
-        .limit(n_seeds)
-        .select("host")
-    )
-    dist = seeds.select(
+    dist = _top_indeg_seeds(e, n_seeds).select(
         "host", F.lit(0).cast("bigint").alias("cost_e6")
     ).localCheckpoint(eager=True)
     for _ in range(n_rounds):
@@ -2733,12 +2689,9 @@ def luby_mis(pages: DataFrame, n_rounds: int = MIS_ROUNDS) -> DataFrame:
     neighbor hits that min, one anti-join deactivates; active is
     localCheckpoint'd so the iterative lineage stays flat — the
     CC/PageRank fixpoint discipline."""
-    # materialize the symmetric edge list ONCE — it feeds two semi-joins
-    # and the neighbor-priority join EVERY round, and without this the
-    # live lineage re-runs the html anchor extraction per round (the
-    # CLAUDE.md self-join-recompute lesson)
-    edges = sym_host_edges(pages).localCheckpoint(eager=True)
     from ..functions.hashing import M, sql_strhash
+
+    edges = sym_host_edges(pages)
 
     # ONE state DataFrame (node, base, wave) and ONE checkpoint barrier
     # per round, THREE shuffles per round total — the minimal residual-MIS
@@ -2995,7 +2948,7 @@ def community_graph(
     corpus-scale rows survive past the two label joins. A hot
     community (giant LPA basin) is only a COUNT hot key — partial
     aggregation absorbs it map-side; nothing fans out."""
-    labels = lpa_communities(pages, n_rounds).localCheckpoint(eager=True)
+    labels = lpa_communities(pages, n_rounds)
     e = distinct_host_edges(pages)
     lab_u = labels.select(
         F.col("host").alias("u"), F.col("community").alias("cu")
@@ -3201,14 +3154,8 @@ def rectangle_census(pages: DataFrame) -> DataFrame:
     center degree and counts hub centers via the dense-block identity
     instead; the cap's effect is observable, not silent, because the
     census reports the wedge-pair total it summed)."""
-    e = (
-        distinct_host_edges(pages)
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected_edges(distinct_host_edges(pages), "u", "v")
+    e = e.localCheckpoint(eager=True)
     adj = e.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
         e.select(F.col("b").alias("x"), F.col("a").alias("n"))
     )
@@ -3291,14 +3238,7 @@ def ktruss(triples: DataFrame, k: int = KTRUSS_K,
     The entity graph is the triangle-bearing one — the planted host
     graph is hub-spoke + chain, hence triangle-free by construction
     (measured; its truss is empty at any k >= 3)."""
-    e = (
-        triples.where(F.col("subj") != F.col("obj"))
-        .select(
-            F.least("subj", "obj").alias("a"),
-            F.greatest("subj", "obj").alias("b"),
-        )
-        .distinct()
-    )
+    e = _undirected_edges(triples, "subj", "obj")
     return ktruss_from_edges(e, k=k, n_rounds=n_rounds)
 
 
@@ -3317,8 +3257,8 @@ def ktruss_from_edges(edges: DataFrame, k: int = KTRUSS_K,
     unbounded fixpoint); the planted graph reaches its fixpoint within
     the budget, asserted in pytest by an extra round being a no-op.
 
-    Scale shape per round: triangle support reuses the degree-oriented
-    wedge enumeration verbatim (orientation bounds wedge fan-out by
+    Scale shape per round: triangle support comes from
+    `extract._closed_triangles` (orientation bounds wedge fan-out by
     O(sqrt m); hubs generate zero wedges), each closed triangle
     EXPLODES to its three member edges (constant x3) into a map-side-
     combined per-edge count; the < k-2 filter is a join-back; two
@@ -3332,30 +3272,7 @@ def ktruss_from_edges(edges: DataFrame, k: int = KTRUSS_K,
     e = edges.localCheckpoint(eager=True)
     sup = None
     for _ in range(n_rounds):
-        deg = (
-            e.select(F.col("a").alias("n"))
-            .unionAll(e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count("*").alias("d"))
-        )
-        ori = (
-            e.join(deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a")
-            .join(deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b")
-            .select(
-                F.when(F.col("da") <= F.col("db"), F.col("a"))
-                .otherwise(F.col("b")).alias("src"),
-                F.when(F.col("da") <= F.col("db"), F.col("b"))
-                .otherwise(F.col("a")).alias("dst"),
-            )
-        )
-        wedges = (
-            ori.select("src", F.col("dst").alias("v"))
-            .join(ori.select("src", F.col("dst").alias("w")), "src")
-            .where(F.col("v") < F.col("w"))
-        )
-        tri = wedges.join(
-            e, (F.col("v") == F.col("a")) & (F.col("w") == F.col("b"))
-        ).select("src", "v", "w")
+        _, tri = _closed_triangles(e)
         edge_sup = (
             tri.select(
                 F.explode(

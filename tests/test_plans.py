@@ -119,29 +119,6 @@ def test_entity_degree_hand_case(spark):
     assert got == {"a": (3, 2), "b": (3, 2), "c": (2, 2)}
 
 
-def test_kg_triangles_hand_case_and_hub_guard(spark):
-    from nerpii_spark.operators.extract import kg_triangles
-
-    # a-b-c closes a triangle; c-d dangles; (a,q,b) duplicates edge a-b
-    # across predicates (the distinct edge set must collapse it)
-    t = spark.createDataFrame(
-        [("a", "p", "b"), ("b", "p", "c"), ("a", "p", "c"),
-         ("c", "p", "d"), ("a", "q", "b")],
-        "subj string, pred string, obj string",
-    )
-    row = kg_triangles(t).collect()[0]
-    assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (4, 4, 1)
-    # hub guard: in a star K_{1,200} every edge orients leaf -> hub
-    # (degree orientation), so the hub contributes ZERO wedges — the
-    # property that keeps a celebrity node from exploding the self-join
-    star = spark.createDataFrame(
-        [(f"leaf{i:03d}", "p", "hub") for i in range(200)],
-        "subj string, pred string, obj string",
-    )
-    r2 = kg_triangles(star).collect()[0]
-    assert (r2["n_nodes"], r2["n_edges"], r2["n_triangles"]) == (201, 200, 0)
-
-
 def test_hits_hand_cases(spark):
     """HITS hand cases: a pure hub/authority bipartite star separates
     the two roles exactly; a 2-cycle is symmetric and stationary."""

@@ -1,66 +1,10 @@
-"""Wave-29: k-truss edge-density core + greedy max-coverage selection.
-
-The truss gate plants a K4-with-pendant-triangle graph (the pendant
-peels, the K4 survives) and asserts the round budget reaches the
-fixpoint (an extra round is a no-op). The cover gate hand-computes the
-greedy sequence incl. the tie rule and the saturation stop, and
+"""Wave-29: greedy max-coverage selection. The cover gate hand-computes
+the greedy sequence incl. the tie rule and the saturation stop, and
 asserts the submodular monotone-gain property on the real corpus."""
 
-from pyspark.sql import functions as F
-
 from nerpii_spark.operators import textstats as TS
-from nerpii_spark.operators import webgraph as WG
 
 SF = "/root/testdata/sf0.001"
-
-
-def _edges_df(spark, edges):
-    return (
-        spark.createDataFrame(edges, "u string, v string")
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
-        .distinct()
-    )
-
-
-def test_ktruss_k4_survives_pendant_peels(spark):
-    k4 = [(a, b) for i, a in enumerate("abcd") for b in "abcd"[i + 1:]]
-    pendant = [("d", "e"), ("d", "f"), ("e", "f")]  # lone triangle
-    e = _edges_df(spark, k4 + pendant)
-    got = {
-        (r["a"], r["b"]): r["support"]
-        for r in WG.ktruss_from_edges(e, k=4, n_rounds=3).collect()
-    }
-    # K4: every edge in exactly 2 triangles -> survives k=4
-    assert set(got) == {(a, b) for a, b in k4}
-    assert all(s == 2 for s in got.values())
-
-
-def test_ktruss_zero_rounds_raises(spark):
-    # ADVICE r3: n_rounds=0 used to fall through to `sup.where` with
-    # sup=None (AttributeError); now a clear contract error
-    import pytest
-
-    e = _edges_df(spark, [("a", "b")])
-    with pytest.raises(ValueError, match="n_rounds >= 1"):
-        WG.ktruss_from_edges(e, k=3, n_rounds=0)
-
-
-def test_ktruss_fixpoint_within_budget(spark):
-    chain = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"),
-             ("d", "e"), ("c", "e"), ("e", "f")]
-    e = _edges_df(spark, chain)
-    r3 = sorted(
-        tuple(r) for r in WG.ktruss_from_edges(e, k=3, n_rounds=3).collect()
-    )
-    r4 = sorted(
-        tuple(r) for r in WG.ktruss_from_edges(e, k=3, n_rounds=4).collect()
-    )
-    assert r3 == r4
-    # k=3 keeps exactly the two triangles, drops the bridge-free tail
-    kept = {(a, b) for a, b, _ in r3}
-    assert ("e", "f") not in kept and ("a", "b") in kept
 
 
 def test_greedy_cover_hand_golden(spark):

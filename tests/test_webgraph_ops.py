@@ -1,11 +1,11 @@
-"""Hand-crafted-graph goldens for the round-3 web-graph/link additions:
-host components (WCC), bounded-round LPA communities, and FastSS
-deletion-neighborhood fuzzy pairs — each checked against an
-independently hand-computed (or brute-forced in Python) expectation,
-not against the operator's own DuckDB oracle."""
+"""Hand-crafted-graph goldens for the web-graph operators (components,
+LPA, BFS depth, trust, k-core, k-truss, ...) and FastSS fuzzy pairs —
+each checked against an independently hand-computed, brute-forced or
+networkx expectation, not against the operator's own DuckDB oracle."""
 
 from pyspark.sql import functions as F
 
+from nerpii_spark.operators import webgraph as WG
 from nerpii_spark.operators.link import fuzzy_surface_pairs
 from nerpii_spark.operators.webgraph import host_components, lpa_communities
 
@@ -671,3 +671,139 @@ def test_modularity_matches_python_mirror_of_lpa_partition(spark):
         r["s_stubs"], r["e_in_stubs"], r["sum_dc2"], r["q_e6"]
     ) == (S, e_in, sum_dc2, trunc_div)
     assert S == 14
+
+
+# ---------------------------------------------------------------------------
+# ktruss
+# ---------------------------------------------------------------------------
+
+
+def _edges_df(spark, edges):
+    return (
+        spark.createDataFrame(edges, "u string, v string")
+        .select(
+            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
+        )
+        .distinct()
+    )
+
+
+def test_ktruss_k4_survives_pendant_peels(spark):
+    k4 = [(a, b) for i, a in enumerate("abcd") for b in "abcd"[i + 1:]]
+    pendant = [("d", "e"), ("d", "f"), ("e", "f")]  # lone triangle
+    e = _edges_df(spark, k4 + pendant)
+    got = {
+        (r["a"], r["b"]): r["support"]
+        for r in WG.ktruss_from_edges(e, k=4, n_rounds=3).collect()
+    }
+    # K4: every edge in exactly 2 triangles -> survives k=4
+    assert set(got) == {(a, b) for a, b in k4}
+    assert all(s == 2 for s in got.values())
+
+
+def test_ktruss_zero_rounds_raises(spark):
+    # ADVICE r3: n_rounds=0 used to fall through to `sup.where` with
+    # sup=None (AttributeError); now a clear contract error
+    import pytest
+
+    e = _edges_df(spark, [("a", "b")])
+    with pytest.raises(ValueError, match="n_rounds >= 1"):
+        WG.ktruss_from_edges(e, k=3, n_rounds=0)
+
+
+def test_ktruss_fixpoint_within_budget(spark):
+    chain = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"),
+             ("d", "e"), ("c", "e"), ("e", "f")]
+    e = _edges_df(spark, chain)
+    r3 = sorted(
+        tuple(r) for r in WG.ktruss_from_edges(e, k=3, n_rounds=3).collect()
+    )
+    r4 = sorted(
+        tuple(r) for r in WG.ktruss_from_edges(e, k=3, n_rounds=4).collect()
+    )
+    assert r3 == r4
+    # k=3 keeps exactly the two triangles, drops the bridge-free tail
+    kept = {(a, b) for a, b, _ in r3}
+    assert ("e", "f") not in kept and ("a", "b") in kept
+
+
+# ---------------------------------------------------------------------------
+# networkx referee for the shared graph kernels
+# ---------------------------------------------------------------------------
+
+
+def _referee_shapes():
+    import networkx as nx
+
+    shapes = {
+        "k5": nx.complete_graph(5),
+        "star40": nx.star_graph(40),
+        "diamond": nx.Graph([(0, 1), (1, 2), (0, 2), (1, 3), (2, 3)]),
+        "cycle6": nx.cycle_graph(6),
+        "ladder": nx.ladder_graph(5),
+        "path12": nx.path_graph(12),
+    }
+    for seed, (n, p) in enumerate([(12, 0.35), (10, 0.5), (12, 0.6)]):
+        shapes[f"gnp{seed}"] = nx.gnp_random_graph(n, p, seed=seed)
+    # hosts named so that string order differs from numeric order
+    return {
+        name: nx.relabel_nodes(g, {v: f"n{v:02d}.io" for v in g})
+        for name, g in shapes.items()
+    }
+
+
+def test_graph_kernels_match_networkx(spark):
+    """The shared triangle, edge-set and bounded-BFS kernels against
+    networkx on small graphs, one Spark run per shape and operator:
+    kg_triangles' census, clustering_coeff's integer coefficient,
+    ktruss_from_edges (a budget past the fixpoint) against nx.k_truss,
+    and crawl_depth's hop depths against a cut-off multi-source
+    Dijkstra from the same top-in-degree seeds."""
+    from collections import Counter
+
+    import networkx as nx
+
+    from nerpii_spark.operators.extract import kg_triangles
+
+    n_seeds, max_depth = 2, 3
+    for name, g in _referee_shapes().items():
+        g.remove_nodes_from(list(nx.isolates(g)))
+        edges = list(g.edges())  # (u, v) is also the link direction
+        tri = nx.triangles(g)
+
+        triples = spark.createDataFrame(
+            [(u, "p", v) for u, v in edges],
+            "subj string, pred string, obj string",
+        )
+        [r] = kg_triangles(triples).collect()
+        assert (r["n_nodes"], r["n_edges"], r["n_triangles"]) == (
+            g.number_of_nodes(), g.number_of_edges(), sum(tri.values()) // 3
+        ), name
+
+        pages = _pages(spark, edges)
+        want = sorted(
+            (v, d, tri[v], 2_000_000 * tri[v] // max(d * (d - 1), 1))
+            for v, d in g.degree()
+        )
+        got = sorted(map(tuple, WG.clustering_coeff(pages).collect()))
+        assert got == want, name
+
+        sorted_e = spark.createDataFrame(
+            [tuple(sorted(e)) for e in edges], "a string, b string"
+        )
+        for k in (3, 4):
+            truss = nx.k_truss(g, k)
+            want = sorted(
+                (*sorted(e), len(set(truss[e[0]]) & set(truss[e[1]])))
+                for e in truss.edges()
+            )
+            got = WG.ktruss_from_edges(sorted_e, k=k, n_rounds=5).collect()
+            assert sorted(map(tuple, got)) == want, (name, k)
+
+        indeg = Counter(v for _, v in edges)
+        seeds = sorted(indeg, key=lambda h: (-indeg[h], h))[:n_seeds]
+        want = nx.multi_source_dijkstra_path_length(
+            g, set(seeds), cutoff=max_depth
+        )
+        got = WG.crawl_depth(pages, n_seeds=n_seeds, max_depth=max_depth)
+        assert sorted(map(tuple, got.collect())) == sorted(want.items()), name
